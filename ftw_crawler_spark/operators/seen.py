@@ -201,9 +201,9 @@ def fused_delta_counts_plan(df: DataFrame, url_col: str, shape: tuple,
     """ONE Arrow pass emitting a bloom delta's shard rows AND row
     counts: per input partition, (s, bits) rows for the shards it saw
     plus one counts row (s = -1) carrying (n total, n with ``ok_col``
-    NULL). Callers that already pay a driver round-trip for the counts
-    (the crawl's link-discovery admission job) fold the seen-filter
-    delta build into it instead of running a second job.
+    NULL). ``IncrementalUrlFilter.admit`` folds the seen-filter delta
+    build into the counts job it pays anyway (the crawl's
+    link-discovery admission) instead of running a second job.
 
     Bit math is ``_positions`` verbatim, so
     ``assemble_bloom_bytes(shard rows)`` is byte-identical to
@@ -477,10 +477,34 @@ class IncrementalUrlFilter:
     @property
     def is_broadcastable(self) -> bool:
         """True when the filter serves as driver bytes (the small-
-        filter form) — the form whose per-batch ``add`` would collect
-        a delta job of its own, and therefore the form where callers
-        should prefer ``fused_delta_counts_plan`` + ``add_bytes``."""
+        filter form), False for the (shard, bits) relation form."""
         return self._broadcastable
+
+    def admit(self, df: DataFrame, url_col: str,
+              ok_col: str) -> tuple[int, int]:
+        """Count ``df`` — (n rows, ok rows with ``ok_col`` NULL) — and
+        add its urls to the filter. In the driver-bytes form the counts
+        and the bloom delta come out of ONE Arrow pass (a separate
+        delta build was a whole second driver job per call) and merge
+        driver-side with ``add_bytes``, bit-identical to ``add``; the
+        relation form, whose delta never exists as driver bytes, counts
+        first and then ``add``s."""
+        if self._broadcastable:
+            rows = fused_delta_counts_plan(df, url_col, self.shape,
+                                           ok_col).collect()
+            n = sum(r["n"] for r in rows if r["s"] == -1)
+            ok = sum(r["ok"] for r in rows if r["s"] == -1)
+            if n:
+                self.add_bytes(assemble_bloom_bytes(
+                    [(r["s"], r["bits"]) for r in rows if r["s"] >= 0],
+                    self.shape))
+            return n, ok
+        c = df.agg(F.count(F.lit(1)).alias("n"),
+                   F.count(F.when(F.col(ok_col).isNull(), F.lit(1)))
+                   .alias("ok")).collect()[0]
+        if c["n"]:
+            self.add(df, url_col)
+        return c["n"], c["ok"]
 
     def add_bytes(self, delta_bytes: bytes | None) -> None:
         """Merge a delta already collected by the caller (byte form

@@ -5,22 +5,27 @@ Reference lifecycle (main.py:69-162, SURVEY.md §3.1): per site —
 discover+parse sitemaps → scan index → purge removed docs → per URL:
 last-indexed lookup → is_modified / redirect / status gates → fetch →
 extract → upsert into Solr. Here each *crawl iteration* is one
-micro-batch over the whole (multi-site) frontier:
+micro-batch over the whole (multi-site) frontier.
 
-1. frontier = sitemap discovery+expansion (cached — the reference
-   memoizes parsed sitemaps for reuse by purge + crawl,
-   sitemap.py:70-77,191-198);
-2. purge anti-join → tombstones (once per run, before crawling,
-   main.py:102);
-3. annotate frontier: last-indexed join against the PRE-RUN index
+A ``CrawlState`` carries everything one batch hands the next. A fresh
+run builds it in the plan step, a resumed run from its checkpoints
+(``_resume_state``); then one loop runs these steps per batch:
+
+1. plan (fresh runs, once): sitemap discovery+expansion, purge
+   anti-join → tombstones (before crawling, main.py:102), and the
+   frontier annotation — last-indexed join against the PRE-RUN index
    snapshot (the reference queries Solr once per site before its loop,
    main.py:99 — this run's own upserts are invisible to is_modified),
-   fetch-status join, warc_ts join (column-pruned: html is NOT read
-   here), skip_reason classification (F4/F7/F8);
-4. loop: politeness-scheduled batch → page-store join (html/text read
-   only for admitted rows) → extraction projection → upsert append →
-   host-state update (429 doubling) → exact anti-join of processed
-   rows → per-batch checkpoint commit.
+   fetch-status and warc_ts joins (html is NOT read here), skip_reason
+   classification (F4/F7/F8);
+2. schedule: the politeness-capped batch, prefetched on a background
+   thread while the previous batch extracts;
+3. transition: host state (429 doubling) and the processed anti-join;
+4. extract+sink: page-store join (html/text read only for admitted
+   rows) → extraction projection → upsert append;
+5. discover (``follow_links`` only): the batch's outlinks become new
+   frontier rows before the next schedule is drawn;
+6. commit: batch K's checkpoint, written once K's discoveries are known.
 
 Determinism: the schedule is a pure function of (frontier,
 host_state); crawl_seq is carried into the index (lineage) so the
@@ -30,15 +35,16 @@ run_meta.json so resume is bit-stable (no wall-clock in the plan).
 Resume: checkpoints/batch=K holds ONE combined *state* parquet — for a
 full snapshot (batch -1 and every ``ckpt_full_every`` batches) the
 whole remaining frontier + host rows, for a delta the batch's tiny
-politeness-capped processed crawl_seq set + host rows — one write,
-one job either way, with a commit marker recording the kind written
-LAST (row kinds inside the file split on the crawl_seq null pattern). Delta
-checkpoints bound write amplification: a full rewrite per batch is
-O(frontier × batches) at a 10^10-row frontier, while a delta is
-proportional to the batch. Resume reconstructs
-``remaining = last_full_snapshot ANTI-JOIN ∪(processed deltas)``;
-a crash between sink append and commit replays batch K idempotently
-(upsert-by-UID makes the replay a no-op).
+politeness-capped processed crawl_seq set + changed host rows + the
+rows it discovered — one write, one job either way, with a commit
+marker recording the kind written LAST (row kinds inside the file
+split on the crawl_seq null pattern). Delta checkpoints bound write
+amplification: a full rewrite per batch is O(frontier × batches) at a
+10^10-row frontier, while a delta is proportional to the batch. Resume
+reconstructs ``remaining = last_full_snapshot ANTI-JOIN ∪(processed
+deltas)``; a crash between sink append and commit replays batch K
+idempotently (upsert-by-UID makes the replay a no-op). A fresh run
+starts from an empty checkpoint dir and delta log.
 
 Compaction: when the sink's MOR delta log exceeds ``compact_every``
 generations it is folded into a fresh base snapshot mid-run, bounding
@@ -49,17 +55,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import time
 from dataclasses import dataclass, field
 from datetime import datetime
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ftw_crawler_spark import config as cfg
-from ftw_crawler_spark.operators import politeness, robots, seen
+from ftw_crawler_spark.functions.urls import canonical_url_col
+from ftw_crawler_spark.operators import linkgraph, politeness, robots, seen
 from ftw_crawler_spark.operators.extraction import extract_documents
 from ftw_crawler_spark.operators.incremental import (
     is_modified_col, purge_candidates, with_last_indexed)
@@ -82,17 +91,12 @@ _DISCOVERED_SEQ_MOD = 1 << 61
 
 
 def load_run_metrics(out_dir: str) -> list:
-    """All metrics rows of a run: the legacy inline list in
-    run_meta.json plus the append-only ``metrics.jsonl`` lines (the
-    per-batch persistence path — one O(1) append per batch instead of
-    rewriting the whole history, which is O(batches²) file I/O over a
-    long crawl). A torn final line (crash mid-append) is skipped; the
-    metrics are observability/lineage, never resume inputs."""
+    """All metrics rows of a run: the append-only ``metrics.jsonl``
+    lines (one O(1) append per batch instead of rewriting the whole
+    history, which is O(batches²) file I/O over a long crawl). A torn
+    final line (crash mid-append) is skipped; the metrics are
+    observability/lineage, never resume inputs."""
     rows: list = []
-    meta_path = os.path.join(out_dir, "run_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            rows.extend(json.load(fh).get("metrics", []))
     jl = os.path.join(out_dir, "metrics.jsonl")
     if os.path.exists(jl):
         with open(jl) as fh:
@@ -115,6 +119,60 @@ class CrawlResult:
 
     def index(self) -> DataFrame:
         return self.sink.current()
+
+
+@dataclass
+class CrawlState:
+    """Everything one batch hands the next. A fresh run builds it in
+    ``_plan``, a resumed one from its checkpoints; then the same loop
+    runs over it. While a prefetch task is in flight it owns
+    ``remaining`` and the discover fields — the loop's thread touches
+    them only after joining it."""
+    spark: SparkSession
+    out_dir: str
+    world: dict
+    sink: IndexSink
+    sdf: DataFrame
+    batch_seconds: float
+    order_mode: str
+    ckpt_full_every: int
+    force: bool
+    not_due: DataFrame | None = None   # the recrawl gate's (loc) relation
+    remaining: DataFrame | None = None
+    host_state: DataFrame | None = None
+    last_full: int = -1
+    batch_id: int = 0
+    metrics: list = field(default_factory=list)
+    flushed: int = 0            # metrics rows already in metrics.jsonl
+    # outstanding background tasks: schedule prefetch, checkpoint writer
+    # (at most one each), and the plan step's purge write + filter build
+    pending: _BgTask | None = None
+    ckpt_writer: _BgTask | None = None
+    purge_writer: _BgTask | None = None
+    filter_task: _BgTask | None = None
+    # the last batch's checkpoint (batch_id, is_full, processed,
+    # pre-transition host_state), committed once its discoveries are
+    # known, and those discoveries (rows, candidates, enqueued)
+    staged: tuple | None = None
+    found: tuple | None = None
+    # the discover step, present when links are followed: the enqueued
+    # set (every loc ever put on the frontier), its incremental filter,
+    # the lazy segments unioned onto it since its last compaction, and
+    # what annotating discovered rows needs
+    enqueued: DataFrame | None = None
+    enq_filter: seen.IncrementalUrlFilter | None = None
+    enq_segments: int = 0
+    host_dim: DataFrame | None = None
+    index0_filter: seen.IncrementalUrlFilter | None = None
+    index0_rows: int = 0
+
+    @property
+    def ckpt_root(self) -> str:
+        return os.path.join(self.out_dir, "checkpoints")
+
+    @property
+    def discovering(self) -> bool:
+        return self.enq_filter is not None
 
 
 def sites_df(spark: SparkSession, sites: list) -> DataFrame:
@@ -335,8 +393,6 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
               pages_table: str | None = None,
               ckpt_full_every: int = 8,
               compact_every: int | None = 16,
-              compact_delta_frac: float | None = 0.5,
-              compact_min_bytes: int = 256 << 20,
               follow_links: bool = False,
               recrawl_from: str | None = None) -> CrawlResult:
     """``follow_links`` turns on link-following frontier discovery (the
@@ -371,655 +427,467 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
     back to always-due, never the other way around."""
     sites = sites if sites is not None else default_sites()
     config = config or cfg.default_config()
-
-    def _build_not_due(ct: datetime) -> DataFrame | None:
-        """(loc) relation of not-yet-due urls per the prior sink's
-        change history; None when the gate is off or the prior sink is
-        empty. Narrow (url-only) relation; lazily checkpointed because
-        fresh-plus-discovery paths consume it repeatedly under
-        different partitionings (the multi-consumer-sketch invariant).
-        Epochs are UTC (calendar.timegm) to match Spark's
-        unix_timestamp under the session's UTC timezone."""
-        if not recrawl_from:
-            return None
-        import calendar
-
-        from ftw_crawler_spark.operators.incremental import (
-            change_observations, recrawl_schedule)
-        prior = IndexSink(spark, recrawl_from, read_only=True)
-        log = prior.op_log()
-        if log is None:
-            return None
-        now_epoch = calendar.timegm(ct.utctimetuple())
-        sched = recrawl_schedule(change_observations(log),
-                                 entity_col="url", ts_col="ts")
-        return (sched.filter(F.col("next_due_epoch") > F.lit(now_epoch))
-                .select(F.col("url").alias("loc"))
-                .localCheckpoint(eager=False))
-    # background writers (checkpoint / purge / schedule-prefetch): kept
-    # at function scope so the error paths below can join whatever is
-    # outstanding — a daemon writer must never race interpreter
-    # teardown mid-parquet-write, and its failure must never be
-    # silently dropped behind the primary exception
-    purge_writer = ckpt_writer = pending = idx_filter_task = None
+    # F1: single-URL mode skips non-matching sites (main.py:76-78)
+    if url:
+        sites = [s for s in sites if url.startswith(s.url)]
+        # F1/F2 pin the run to exactly this URL — link discovery
+        # would silently widen it into a site crawl
+        follow_links = False
+    st = CrawlState(spark=spark, out_dir=out_dir,
+                    world=_load_world(spark, world_dir,
+                                      pages_table=pages_table),
+                    sink=IndexSink(spark, os.path.join(out_dir, "index")),
+                    sdf=sites_df(spark, sites),
+                    batch_seconds=batch_seconds, order_mode=order_mode,
+                    ckpt_full_every=ckpt_full_every, force=force)
     try:
-        world = _load_world(spark, world_dir, pages_table=pages_table)
-        sink = IndexSink(spark, os.path.join(out_dir, "index"))
-        ckpt_root = os.path.join(out_dir, "checkpoints")
-        os.makedirs(ckpt_root, exist_ok=True)
-        meta_path = os.path.join(out_dir, "run_meta.json")
-        metrics_jsonl = os.path.join(out_dir, "metrics.jsonl")
-        flushed = 0     # metrics rows already appended to the jsonl
-
-        def _flush_metrics():
-            # append-only persistence: O(new rows) per call, never a
-            # rewrite of the whole history (load_run_metrics reads it)
-            nonlocal flushed
-            if flushed < len(metrics):
-                with open(metrics_jsonl, "ab+") as fh:
-                    # repair a torn tail (crash mid-append left no
-                    # newline): without this the next row glues onto
-                    # the fragment and BOTH lines are lost to the
-                    # loader's torn-line skip
-                    fh.seek(0, os.SEEK_END)
-                    if fh.tell() > 0:
-                        fh.seek(-1, os.SEEK_END)
-                        if fh.read(1) != b"\n":
-                            fh.write(b"\n")
-                    for m in metrics[flushed:]:
-                        fh.write((json.dumps(m) + "\n").encode())
-                flushed = len(metrics)
-
-        # F1: single-URL mode skips non-matching sites (main.py:76-78)
-        if url:
-            sites = [s for s in sites if url.startswith(s.url)]
-            # F1/F2 pin the run to exactly this URL — link discovery
-            # would silently widen it into a site crawl, so single-URL
-            # mode disables follow-links (documented in the docstring)
-            follow_links = False
-
-        committed = _committed_batches(ckpt_root)
-        resuming = resume and bool(committed)
-        enqueued = None
-        n_enqueued = 0
-        idx_filter = None   # fresh path builds one over the base index
-
-        if resuming:
-            with open(meta_path) as fh:
-                meta = json.load(fh)
-            crawl_time = datetime.fromisoformat(meta["crawl_time"])
-            # the gate relation is rebuilt on resume from the same
-            # prior sink + the SAME pinned crawl_time, so discovered-
-            # candidate annotation replays exactly
-            not_due = _build_not_due(crawl_time)
-            last = committed[-1]
-            remaining, host_state, last_full = _resume_state(
-                spark, ckpt_root, committed)
-            metrics = load_run_metrics(out_dir)
-            flushed = len(metrics)   # new rows append after the tail
-            start_batch = last + 1
-            ckpt_writer = None
+        committed = _committed_batches(st.ckpt_root)
+        enqueued = idx_filter = None
+        if resume and committed:
+            with open(os.path.join(out_dir, "run_meta.json")) as fh:
+                crawl_time = datetime.fromisoformat(
+                    json.load(fh)["crawl_time"])
+            # rebuilt from the same prior sink and the SAME pinned
+            # crawl_time, so discovered-candidate annotation replays
+            st.not_due = _not_due(spark, recrawl_from, crawl_time)
+            state = _resume_state(spark, st.ckpt_root, committed,
+                                  follow_links)
+            st.remaining, st.host_state, st.last_full = state[:3]
+            st.metrics = load_run_metrics(out_dir)
+            st.flushed = len(st.metrics)  # new rows append after them
+            st.batch_id = committed[-1] + 1
             if follow_links:
-                # enqueued-set reconstruction, exact: the enqueued0
-                # parquet carries every annotated frontier loc
-                # (INCLUDING skipped — a re-discovered row annotates
-                # without its sitemap lastmod, so a not_modified skip
-                # would come back crawlable if dropped here), fulls
-                # after -1 carry rows (incl. discovered) still pending
-                # at their batch, and every delta carries the rows
-                # DISCOVERED at its batch — so every enqueued url is
-                # on disk regardless of when it was crawled.
-                # Discovered-but-skipped candidates are the only
-                # under-approximation: they re-annotate exactly as on
-                # first discovery (no sitemap context either time) →
-                # the same skip, never a crawl. sink.current() must
-                # NOT be used here: it over-approximates —
-                # failed-site docs survive the purge without ever
-                # being enqueued, and seeding them would DROP
-                # candidates an uninterrupted run crawls.
-                fulls = [b for b in committed
-                         if _ckpt_kind(ckpt_root, b) == "full"
-                         and b >= 0]
-                enq0 = os.path.join(ckpt_root, "enqueued0")
-                enqueued = (spark.read.parquet(enq0)
-                            if os.path.isdir(enq0) else
-                            _read_ckpt(spark, ckpt_root, -1)[0]
-                            .select("loc"))
-                for b in fulls:
-                    enqueued = enqueued.unionByName(
-                        _read_ckpt(spark, ckpt_root, b)[0]
-                        .select("loc"))
-                delta_states = [
-                    os.path.join(ckpt_root, f"batch={b}", "state")
-                    for b in committed
-                    if _ckpt_kind(ckpt_root, b) == "delta"]
-                delta_states = [p for p in delta_states
-                                if os.path.isdir(p)]
-                if delta_states:
-                    st = (spark.read.option("mergeSchema", "true")
-                          .parquet(*delta_states))
-                    if "loc" in st.columns:
-                        enqueued = enqueued.unionByName(
-                            st.filter(F.col("crawl_seq").isNotNull()
-                                      & F.col("loc").isNotNull())
-                            .select("loc"))
-                enqueued = (enqueued.distinct()
-                            .localCheckpoint(eager=True))
-                n_enqueued = enqueued.count()
+                enqueued = state[3].distinct().localCheckpoint(eager=True)
         else:
             crawl_time = crawl_time or DEFAULT_CRAWL_TIME
-            not_due = _build_not_due(crawl_time)
-            with open(meta_path, "w") as fh:
-                json.dump({"crawl_time": crawl_time.isoformat(),
-                           "metrics": []}, fh)
-            if os.path.exists(metrics_jsonl):   # stale from a prior run
-                os.remove(metrics_jsonl)
-            metrics = []
-            start_batch = 0
-
-            t0 = time.perf_counter()
-            sink.write_base_files(f"{world_dir}/index0.parquet")
-            sdf = sites_df(spark, sites)
-
-            # the indexed-url seen filter depends only on the base
-            # snapshot just written — build it on a thread so its job
-            # overlaps the sitemap parse below (which runs a handful of
-            # per-site tasks and leaves most cores idle)
-            idx_filter_task = _BgTask(
-                seen.IncrementalUrlFilter,
-                spark.read.parquet(sink.base_path).select("url"), "url",
-                _parquet_rows(sink.base_path))
-
-            # P2 per-site error isolation (main.py:80-88): a site whose
-            # sitemap discovery fails is recorded and skipped; the rest of
-            # the run proceeds. The error metrics row is the analog of the
-            # reference's failure notification (slack.py:15-61).
-            site_errors: list = []
-            scratch: list = []
-            frontier = build_frontier(spark, sites, world["sitemaps"],
-                                      errors=site_errors,
-                                      scratch=scratch).cache()
-            for err in site_errors:
-                metrics.append({"batch": -1, "event": "site_error", **err})
-
-            # purge BEFORE crawling, on the full sitemap membership even in
-            # single-URL mode (main.py:102 runs before the URL filter) —
-            # but ONLY for sites whose sitemaps resolved: the reference
-            # purges inside the per-site try block, so a dead site's docs
-            # are never purged (its membership is unknown, not empty)
-            failed_ids = {e["site_id"] for e in site_errors}
-            ok_sdf = sites_df(
-                spark, [s for s in sites if s.site_id not in failed_ids])
-            purged = purge_candidates(sink.current(), ok_sdf, frontier)
-            # the tombstone write touches only the sink's delta dir while
-            # the annotation below reads only the PRE-RUN base snapshot
-            # (reference semantics: this run's writes are invisible to
-            # is_modified) — the two jobs are independent, so the purge
-            # write runs in the background under the annotate job. The
-            # error-collect inside build_frontier already warmed the
-            # parsed-entries cache both jobs re-read.
-            purge_writer = _BgTask(sink.append_deletes, purged,
-                                   start_batch)
-            t_purge = time.perf_counter()
-
-            if url:
-                frontier = frontier.filter(F.col("loc") == url)  # F2
-
-            # persist: three consumers below (skip metrics, the remaining
-            # snapshot, initial host state) would otherwise each re-run the
-            # bloom-probe + last-indexed join over the whole frontier
-            idx_filter = idx_filter_task.join()
-            annotated = _annotate_frontier(
-                frontier, world, spark.read.parquet(sink.base_path), sdf,
-                force, index_filter=idx_filter,
-                not_due=not_due).persist()
-            to_crawl = annotated.filter(F.col("skip_reason").isNull())
-
-            # materialize the frontier ONCE executor-side (this scan also
-            # fills the annotated cache end-to-end, so the skip-metrics
-            # count below is a cheap cached pass, not the materializing
-            # job) and hand the parquet snapshot write to a background
-            # thread: the batch-0 schedule consumes the identical
-            # localCheckpointed rows (bit-equality with the disk
-            # round-trip is pinned by the resume/oracle-order tests), so
-            # the frontier-sized write + its commit happen while batch 0
-            # is already crawling. Exactly one writer is ever outstanding
-            # (joined before the next checkpoint write), so markers still
-            # appear in batch order.
-            remaining = to_crawl.localCheckpoint(eager=True)
-            skips = {r["skip_reason"]: r["n"] for r in
-                     annotated.filter(F.col("skip_reason").isNotNull())
-                     .groupBy("skip_reason").count()
-                     .withColumnRenamed("count", "n").collect()}
-            if follow_links:
-                # every frontier loc ever enqueued (INCLUDING skipped —
-                # a skipped url must not be re-queued by discovery: a
-                # re-discovered row annotates WITHOUT its sitemap
-                # lastmod, so e.g. a not_modified skip would come back
-                # crawlable and the resumed run would diverge);
-                # cheap: the annotated cache is warm from the scan
-                # above. Persisted once (O(frontier) locs, the same
-                # class as the batch=-1 full snapshot) so resume can
-                # reconstruct the set exactly — skipped locs live
-                # nowhere else on disk.
-                enqueued = annotated.select("loc").localCheckpoint(
-                    eager=True)
-                n_enqueued = enqueued.count()
-                enqueued.write.mode("overwrite").parquet(
-                    os.path.join(ckpt_root, "enqueued0"))
-            metrics.append({"batch": -1, "event": "plan",
-                            "skips": skips,
-                            "sec_frontier_purge":
-                            round(t_purge - t0, 3),
-                            "sec_annotate":
-                            round(time.perf_counter() - t_purge, 3)})
-
-            # robots Crawl-delay (de-facto REP extension) raises a host's
-            # effective sleeptime above the site config's value
-            delays = (robots.robots_crawl_delays(world["robots"])
-                      if world.get("robots") is not None else None)
-            host_state = politeness.initial_host_state(
-                remaining, sdf, crawl_delays=delays).localCheckpoint(
-                    eager=True)
-            ckpt_writer = _BgTask(_write_ckpt, ckpt_root, -1,
-                                  remaining, host_state)
-            purge_writer.join()
-            # both consumers of the parsed-entries intermediate (purge,
-            # annotate) are done — drop it with the frontier caches
-            for df in scratch:
-                df.unpersist()
-            annotated.unpersist()
-            frontier.unpersist()
-            last_full = -1
-            start_batch = 0
-
-        sdf = sites_df(spark, sites)
-        def _schedule(rem, hs):
-            """Materialize one politeness batch plus its admission metric:
-            ONE job fills the cache AND yields both the admitted total and
-            the per-host lineage metric (north rule) — the per-batch
-            driver latency budget is the sandbox bottleneck, so every
-            folded job counts. Runs on the prefetch thread: batch N+1's
-            schedule is a pure function of (remaining, host_state) after
-            batch N's admission, both of which are known before batch N
-            extracts — so the schedule job overlaps the extraction job."""
-            b = politeness.select_batch(rem, hs, batch_seconds,
-                                        order_mode=order_mode).cache()
-            ph = {r["host"]: r["n"] for r in
-                  b.groupBy("host").agg(
-                      F.count(F.lit(1)).alias("n")).collect()}
-            return b, ph
-
+            st.not_due = _not_due(spark, recrawl_from, crawl_time)
+            enqueued, idx_filter = _plan(st, world_dir, sites, url,
+                                         crawl_time, follow_links)
         if follow_links:
-            from ftw_crawler_spark.operators.linkgraph import (
-                candidates_from_links)
-
-            # host → site dim for scoping + site_id assignment of
-            # discovered urls (two sites on one host: min site_id wins,
-            # deterministically). Keyed on the HOSTNAME (no port) so it
-            # joins the same lower(parse_url HOST) derivation sitemap
-            # rows, host_state and _annotate_discovered use — the
-            # pipeline's politeness model treats all ports of a host as
-            # one host (reference semantics)
-            from urllib.parse import urlsplit
-            host_site: dict[str, int] = {}
-            for s in sites:
-                h = (urlsplit(s.url).hostname or "").lower()
-                host_site[h] = min(host_site.get(h, s.site_id),
-                                   s.site_id)
-            host_dim = spark.createDataFrame(
-                sorted(host_site.items()), "host string, site_id int")
-            # discovered-row annotation uses the immutable PRE-RUN
-            # index (world index0): sink.base_path is rewritten by
-            # mid-run compaction, and reference semantics pin
-            # is_modified to the pre-run snapshot anyway. Its seen
-            # filter is built ONCE per run and reused by every
-            # discovery batch (rebuilding it per batch would be
-            # O(index) per batch); on a fresh run the plan phase
-            # already built the identical filter — the base snapshot
-            # is a verbatim copy of index0 (write_base_files above),
-            # so the url set and the footer-derived geometry match.
-            n_index0 = _parquet_rows(f"{world_dir}/index0.parquet")
-            index0_filter_box = [idx_filter]
-
-            def _index0_filter():
-                # lazy: resumed runs that never discover (exhausted
-                # frontier) skip the O(index) build entirely; built at
-                # most once — only the single prefetch thread calls it
-                if index0_filter_box[0] is None:
-                    index0_filter_box[0] = seen.IncrementalUrlFilter(
-                        world["index0"].select("url"), "url",
-                        expected_items=n_index0)
-                return index0_filter_box[0]
-
-            # INCREMENTAL enqueued-set filter: geometry pinned once
-            # (sized 4× the initial frontier — a production run budgets
-            # its expected discovery volume here), built over the
-            # canonical enqueued set once, then grown per batch with an
-            # O(batch) delta — never a rescan of the frontier-sized
-            # set. Sizing overflow stays exact (anti-join backstop in
-            # candidates_from_links), serving form is picked inside the
-            # helper (driver bytes vs the sharded relation where the
-            # filter never exists whole). `add` runs only on the
-            # prefetch thread — exactly one _discover_schedule is in
-            # flight at a time, satisfying the single-writer contract.
-            from ftw_crawler_spark.functions.urls import (
-                canonical_url_col)
-            from ftw_crawler_spark.operators import seen as seenmod
-
-            def _canon_urls(df):
-                return df.select(
-                    canonical_url_col(F.col("loc")).alias("url"))
-
-            url_filter = seenmod.IncrementalUrlFilter(
-                _canon_urls(enqueued), "url",
-                expected_items=max(4 * n_enqueued, 1024), fpp=0.03)
-
-            # lazy-union segments added to `enq` since its last eager
-            # compaction: one checkpointed batch-sized block per
-            # discovering batch, compacted every ckpt_full_every
-            # batches — per-batch work stays O(batch), not O(frontier)
-            # (the same cadence the main loop uses for `remaining`).
-            # Safe as plain mutable state: exactly one
-            # _discover_schedule runs at a time (joined before the
-            # next launches).
-            enq_segments = [0]
-
-            def _discover_schedule(rem, hs, links, enq, n_enq):
-                """Link discovery over the just-extracted batch's
-                outlinks, then the next schedule — one prefetch-thread
-                unit so the schedule stays a pure function of the
-                post-discovery frontier (resume replays it exactly)."""
-                disc, n_new, n_disc = None, 0, 0
-                if links is not None:
-                    cand = candidates_from_links(
-                        links, enq, known_url_col="loc",
-                        scope_hosts=host_dim.select("host"),
-                        drop_traps=True, known_bloom=url_filter)
-                    # lazy checkpoint: the counts agg right below is
-                    # the materializing action, so plan-run + checkpoint
-                    # + counts are ONE job instead of two (the unit is
-                    # a chain of latency-bound jobs — job count is the
-                    # cost at sandbox scale, BASELINE.md)
-                    ann = _annotate_discovered(
-                        cand, world, sdf, host_dim, force,
-                        index_filter=_index0_filter(),
-                        not_due=not_due).localCheckpoint(
-                            eager=False)
-                    if url_filter.is_broadcastable:
-                        # FUSED admission job (small-filter serving
-                        # form): the counts aggregation and the
-                        # enqueued-filter bloom delta come out of ONE
-                        # Arrow pass/action — the delta build was a
-                        # whole second driver job per discovering
-                        # batch (A/B in BASELINE.md follow-links
-                        # notes); add_bytes then merges driver-side
-                        # with zero jobs, bit-identical to add()
-                        rows = seenmod.fused_delta_counts_plan(
-                            ann.withColumn(
-                                "__curl",
-                                canonical_url_col(F.col("loc"))),
-                            "__curl", url_filter.shape,
-                            "skip_reason").collect()
-                        n_new = sum(r["n"] for r in rows
-                                    if r["s"] == -1)
-                        n_disc = sum(r["ok"] for r in rows
-                                     if r["s"] == -1)
-                        if n_new:
-                            url_filter.add_bytes(
-                                seenmod.assemble_bloom_bytes(
-                                    [(r["s"], r["bits"]) for r in rows
-                                     if r["s"] >= 0], url_filter.shape))
-                    else:
-                        # relation form: the delta never exists as
-                        # driver bytes — keep the two-action path
-                        counts = ann.agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.count(F.when(
-                                F.col("skip_reason").isNull(),
-                                F.lit(1))).alias("ok")).collect()
-                        n_new, n_disc = counts[0]["n"], counts[0]["ok"]
-                        if n_new:
-                            # O(batch) delta into the incremental filter
-                            url_filter.add(_canon_urls(ann), "url")
-                    if n_new:
-                        # lazy union of two checkpointed relations — no
-                        # frontier-sized copy per batch; periodic eager
-                        # compaction bounds the union fan-in
-                        enq = enq.unionByName(ann.select("loc"))
-                        enq_segments[0] += 1
-                        if enq_segments[0] >= ckpt_full_every:
-                            enq = enq.localCheckpoint(eager=True)
-                            enq_segments[0] = 0
-                    if n_disc:
-                        # a plain filter over ann's checkpointed blocks
-                        # — no checkpoint of its own (that was a whole
-                        # extra job for n_disc rows); the main loop's
-                        # full-checkpoint cadence compacts `remaining`
-                        disc = (ann.filter(F.col("skip_reason").isNull())
-                                .select(*rem.columns))
-                        rem = rem.unionByName(disc)
-                b, ph = _schedule(rem, hs)
-                return b, ph, rem, enq, n_enq + n_new, disc, n_disc
-
-        batch_id = start_batch
-        n_batches = 0
-        if follow_links:
-            pending = _BgTask(_discover_schedule, remaining, host_state,
-                              None, enqueued, n_enqueued)
-        else:
-            pending = _BgTask(_schedule, remaining, host_state)
-        batch = None
-        prev_docs = None
-        deferred = None   # follow mode:
-        # (batch_id, is_full, processed, pre-transition host_state)
-
-        def _flush_deferred(disc, n_disc, n_added):
-            """Write the PREVIOUS batch's checkpoint — deferred until
-            its discoveries are known, so a full snapshot reflects the
-            grown frontier and a delta carries the discovered rows the
-            resume replay must re-add."""
-            nonlocal ckpt_writer, deferred
-            if deferred is None:
-                return
-            bid, was_full, proc, hs_before = deferred
-            deferred = None
-            if n_added or n_disc:
-                metrics.append({"batch": bid, "event": "discovery",
-                                "candidates": n_added,
-                                "enqueued": n_disc})
-            if ckpt_writer is not None:
-                ckpt_writer.join()
-            if was_full:
-                ckpt_writer = _BgTask(_write_ckpt, ckpt_root, bid,
-                                      remaining, host_state)
-            else:
-                ckpt_writer = _BgTask(_write_delta_ckpt, ckpt_root, bid,
-                                      proc, host_state, disc, hs_before)
-
-        while True:
-            if max_batches is not None and n_batches >= max_batches:
-                # drain the outstanding prefetch so no schedule job runs
-                # past the return
-                if follow_links:
-                    (b, _ph, remaining, enqueued, n_enq2, disc_prev,
-                     n_disc) = pending.join()
-                    _flush_deferred(disc_prev, n_disc,
-                                    n_enq2 - n_enqueued)
-                    n_enqueued = n_enq2
-                else:
-                    b, _ph = pending.join()
-                b.unpersist()
-                break
-            t0 = time.perf_counter()
-            if follow_links:
-                (batch, per_host, remaining, enqueued, n_enq2, disc_prev,
-                 n_disc) = pending.join()
-                if prev_docs is not None:
-                    prev_docs.unpersist()
-                    prev_docs = None
-                _flush_deferred(disc_prev, n_disc, n_enq2 - n_enqueued)
-                n_enqueued = n_enq2
-            else:
-                batch, per_host = pending.join()
-            admitted = sum(per_host.values())
-            if admitted == 0:
-                # empty schedule ⇒ remaining frontier is exhausted (capacity
-                # is ≥1 per host, so a non-empty frontier always admits rows)
-                batch.unpersist()
-                break
-
-            # state transition first — it is a pure function of batch N
-            # (politeness 429 doubling + the processed-set anti-join), and
-            # publishing it now lets batch N+1's schedule compute on the
-            # prefetch thread WHILE batch N extracts below. The tiny
-            # localCheckpoints pin the exact rows both the prefetch and
-            # the background checkpoint writer consume.
-            hs_prev = host_state     # pre-transition snapshot: the delta
-            # writer diffs against it to persist ONLY changed host rows
-            host_state = politeness.updated_host_state(
-                host_state, batch.filter(F.col("n_429") > 0)
-            ).localCheckpoint(eager=True)
-            is_full = batch_id - last_full >= ckpt_full_every
-            if is_full:
-                remaining = remaining.join(
-                    batch.select("crawl_seq"), "crawl_seq", "left_anti"
-                ).localCheckpoint(eager=True)
-                processed = None
-                last_full = batch_id
-            else:
-                processed = batch.select("crawl_seq").localCheckpoint(
-                    eager=True)
-                remaining = remaining.join(processed, "crawl_seq",
-                                           "left_anti")
-            if not follow_links:
-                # follow mode launches the prefetch AFTER extraction:
-                # the next schedule depends on this batch's discovered
-                # links, which come out of the extraction parse
-                pending = _BgTask(_schedule, remaining, host_state)
-            t_sched = time.perf_counter()
-
-            resources = _batch_resources(batch, world, sdf)
-            # extraction is CPU-dense per byte (one DOM parse per row);
-            # AQE's byte-based coalescing would pack the whole batch into a
-            # few partitions and idle the cluster — spread it explicitly
-            resources = resources.repartition(
-                spark.sparkContext.defaultParallelism)
-            docs = extract_documents(
-                resources, config, crawl_time,
-                passthrough=("crawl_seq", "site_id", "__csid"),
-                emit_outlinks=follow_links)
-            # crawler_site_id injection (main.py:152-153)
-            docs = (docs.withColumn("crawler_site_id", F.col("__csid"))
-                    .drop("__csid")
-                    .withColumn("op_seq", F.col("crawl_seq"))
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .withColumn("url", F.col(config.url_field)))
-            if config.unique_field != "UID":
-                docs = docs.withColumn("UID", F.col(config.unique_field))
-            if follow_links:
-                # the sink write fills this cache; discovery then reads
-                # outlinks from it — page bytes are read and DOM-parsed
-                # exactly once per batch
-                from pyspark import StorageLevel
-                docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-                prev_docs = docs
-                sink.append_upserts(docs.drop("__outlinks"), batch_id)
-            else:
-                sink.append_upserts(docs, batch_id)
-            # count from the written delta's parquet FOOTERS, driver-side —
-            # a docs.count() would re-run the whole extraction stage, and
-            # even a spark.read...count() costs a whole scheduler round
-            # trip for what is pure file metadata
-            indexed = _parquet_rows(
-                os.path.join(sink.delta_root, f"batch={batch_id}"))
-            if follow_links:
-                links = docs.select(
-                    F.col("url").alias("src_url"),
-                    F.explode("__outlinks").alias("dst_url"))
-                pending = _BgTask(_discover_schedule, remaining,
-                                  host_state, links, enqueued,
-                                  n_enqueued)
-            t_extract = time.perf_counter()
-
-            # MOR maintenance: fold the delta log into the base when it
-            # exceeds the generation budget (read-side LWW window stays
-            # bounded however long the crawl runs)
-            compacted = False
-            if (compact_every or compact_delta_frac is not None) and \
-                    sink.should_compact(compact_every, compact_delta_frac,
-                                        compact_min_bytes):
-                sink.compact()
-                compacted = True
-
-            if follow_links:
-                # checkpoint write DEFERRED to the next pending.join():
-                # a full snapshot must include this batch's discovered
-                # rows, a delta must carry them for the resume replay
-                deferred = (batch_id, is_full, processed, hs_prev)
-            else:
-                if ckpt_writer is not None:
-                    # one writer outstanding at a time: batch K's
-                    # checkpoint is committed before batch K+1's is
-                    # written, so the on-disk marker sequence never has
-                    # gaps (resume's delta replay assumes a committed
-                    # prefix)
-                    ckpt_writer.join()
-                if is_full:
-                    # periodic full snapshot: the localCheckpoint (taken
-                    # at the state transition above) truncates the
-                    # anti-join lineage chain executor-side; the
-                    # frontier-sized parquet write + commit happen in
-                    # the background while the next batch crawls (the
-                    # write reads the checkpointed blocks, not the
-                    # lineage)
-                    ckpt_writer = _BgTask(_write_ckpt, ckpt_root,
-                                          batch_id, remaining,
-                                          host_state)
-                else:
-                    # delta checkpoint: bytes proportional to the batch,
-                    # not the frontier — the prefetch thread anti-joined
-                    # the same checkpointed processed set in memory
-                    # while the delta file + commit marker write in the
-                    # background
-                    ckpt_writer = _BgTask(_write_delta_ckpt, ckpt_root,
-                                          batch_id, processed,
-                                          host_state, None, hs_prev)
-            metrics.append({"batch": batch_id, "admitted": admitted,
-                            "indexed": indexed, "compacted": compacted,
-                            "per_host_admitted": per_host,
-                            "sec_schedule": round(t_sched - t0, 3),
-                            "sec_extract_sink":
-                            round(t_extract - t_sched, 3),
-                            "sec_checkpoint":
-                            round(time.perf_counter() - t_extract, 3)})
-            _flush_metrics()
-            batch.unpersist()
-            batch_id += 1
-            n_batches += 1
-
-        if ckpt_writer is not None:
-            ckpt_writer.join()
-        # the final batch's discovery event is appended by
-        # _flush_deferred AFTER that batch's per-batch flush — flush
-        # the tail so the on-disk metrics match CrawlResult.metrics
-        # and a later resume doesn't drop it
-        _flush_metrics()
-        return CrawlResult(out_dir=out_dir, batches=batch_id,
-                           metrics=metrics, sink=sink)
+            _start_discovery(st, sites, world_dir, enqueued, idx_filter)
+        _crawl_batches(st, config, crawl_time, compact_every,
+                       max_batches)
+        return CrawlResult(out_dir=out_dir, batches=st.batch_id,
+                           metrics=st.metrics, sink=st.sink)
     except BaseException:
         # join (and suppress secondary errors from) any outstanding
-        # background writers before propagating the primary failure:
-        # a daemon thread mid-parquet-write must not race interpreter
-        # teardown, and _COMMIT-last ordering means a joined-but-
-        # failed write was never adopted
-        for _t in (pending, ckpt_writer, purge_writer, idx_filter_task):
-            if _t is not None:
+        # background task before propagating the primary failure: a
+        # daemon thread mid-parquet-write must not race interpreter
+        # teardown, and _COMMIT-last ordering means a joined-but-failed
+        # write was never adopted
+        for t in (st.pending, st.ckpt_writer, st.purge_writer,
+                  st.filter_task):
+            if t is not None:
                 try:
-                    _t.join()
+                    t.join()
                 except BaseException:   # noqa: BLE001 — secondary
                     pass
         raise
+
+
+def _not_due(spark: SparkSession, recrawl_from: str | None,
+             ct: datetime) -> DataFrame | None:
+    """(loc) relation of not-yet-due urls per the prior sink's change
+    history; None when the gate is off or the prior sink is empty.
+    Narrow (url-only) relation; lazily checkpointed because the plan
+    and discovery consume it repeatedly under different partitionings
+    (the multi-consumer-sketch invariant). Epochs are UTC
+    (calendar.timegm) to match Spark's unix_timestamp under the
+    session's UTC timezone."""
+    if not recrawl_from:
+        return None
+    import calendar
+
+    from ftw_crawler_spark.operators.incremental import (
+        change_observations, recrawl_schedule)
+    log = IndexSink(spark, recrawl_from, read_only=True).op_log()
+    if log is None:
+        return None
+    now_epoch = calendar.timegm(ct.utctimetuple())
+    sched = recrawl_schedule(change_observations(log),
+                             entity_col="url", ts_col="ts")
+    return (sched.filter(F.col("next_due_epoch") > F.lit(now_epoch))
+            .select(F.col("url").alias("loc"))
+            .localCheckpoint(eager=False))
+
+
+def _plan(st: CrawlState, world_dir: str, sites: list, url: str | None,
+          crawl_time: datetime, follow_links: bool):
+    """Plan step of a fresh run: base snapshot, sitemap frontier,
+    purge, annotation, initial host state; the batch -1 snapshot is
+    left writing in the background. Returns (enqueued, index filter):
+    every annotated loc when ``follow_links`` (else None), and the seen
+    filter over the base snapshot."""
+    spark, sink, world = st.spark, st.sink, st.world
+    # start from an empty checkpoint dir and delta log: a previous
+    # attempt's tombstones, batches or markers must not survive into a
+    # fresh run (checkpoints go first, so a crash here never leaves a
+    # marker over a missing delta)
+    shutil.rmtree(st.ckpt_root, ignore_errors=True)
+    shutil.rmtree(sink.delta_root, ignore_errors=True)
+    os.makedirs(st.ckpt_root)
+    with open(os.path.join(st.out_dir, "run_meta.json"), "w") as fh:
+        json.dump({"crawl_time": crawl_time.isoformat()}, fh)
+    jl = os.path.join(st.out_dir, "metrics.jsonl")
+    if os.path.exists(jl):
+        os.remove(jl)
+    t0 = time.perf_counter()
+    sink.write_base_files(f"{world_dir}/index0.parquet")
+    base = spark.read.parquet(sink.base_path)   # the pre-run snapshot
+    # the indexed-url seen filter depends only on the base snapshot
+    # just written — build it on a thread so its job overlaps the
+    # sitemap parse below (which runs a handful of per-site tasks and
+    # leaves most cores idle)
+    st.filter_task = _BgTask(seen.IncrementalUrlFilter,
+                             base.select("url"), "url",
+                             _parquet_rows(sink.base_path))
+
+    # P2 per-site error isolation (main.py:80-88): a site whose sitemap
+    # discovery fails is recorded and skipped; the rest of the run
+    # proceeds. The error metrics row is the analog of the reference's
+    # failure notification (slack.py:15-61).
+    site_errors: list = []
+    scratch: list = []
+    frontier = build_frontier(spark, sites, world["sitemaps"],
+                              errors=site_errors, scratch=scratch).cache()
+    for err in site_errors:
+        st.metrics.append({"batch": -1, "event": "site_error", **err})
+
+    # purge BEFORE crawling, on the full sitemap membership even in
+    # single-URL mode (main.py:102 runs before the URL filter) — but
+    # ONLY for sites whose sitemaps resolved: the reference purges
+    # inside the per-site try block, so a dead site's docs are never
+    # purged (its membership is unknown, not empty). It diffs against
+    # the pre-run base snapshot, as the annotation below does: with the
+    # delta log cleared above, sink.current() is that snapshot, resolved
+    # (its shuffle writes the tombstones as one file, where the raw
+    # base scan wrote one per base split)
+    failed_ids = {e["site_id"] for e in site_errors}
+    ok_sdf = sites_df(
+        spark, [s for s in sites if s.site_id not in failed_ids])
+    purged = purge_candidates(sink.current(), ok_sdf, frontier)
+    # the tombstone write touches only the sink's delta dir while the
+    # annotation reads only the base snapshot — the two jobs are
+    # independent, so the purge write runs under the annotate job. The
+    # error-collect inside build_frontier already warmed the
+    # parsed-entries cache both jobs re-read.
+    st.purge_writer = _BgTask(sink.append_deletes, purged, 0)
+    t_purge = time.perf_counter()
+
+    if url:
+        frontier = frontier.filter(F.col("loc") == url)  # F2
+
+    # persist: three consumers below (skip metrics, the remaining
+    # snapshot, initial host state) would otherwise each re-run the
+    # bloom-probe + last-indexed join over the whole frontier
+    idx_filter = st.filter_task.join()
+    annotated = _annotate_frontier(
+        frontier, world, base, st.sdf, st.force, index_filter=idx_filter,
+        not_due=st.not_due).persist()
+
+    # materialize the frontier ONCE executor-side (this scan also fills
+    # the annotated cache, so the skip-metrics count below is a cheap
+    # cached pass) and hand the parquet snapshot write to a background
+    # thread: the batch-0 schedule consumes the identical
+    # localCheckpointed rows, so the frontier-sized write + its commit
+    # happen while batch 0 is already crawling
+    st.remaining = annotated.filter(
+        F.col("skip_reason").isNull()).localCheckpoint(eager=True)
+    skips = {r["skip_reason"]: r["n"] for r in
+             annotated.filter(F.col("skip_reason").isNotNull())
+             .groupBy("skip_reason").count()
+             .withColumnRenamed("count", "n").collect()}
+    enqueued = None
+    if follow_links:
+        # the discover step's enqueued set: every frontier loc,
+        # INCLUDING skipped ones (a re-discovered row annotates WITHOUT
+        # its sitemap lastmod, so e.g. a not_modified skip would come
+        # back crawlable). Persisted once, O(frontier) locs like the
+        # batch -1 snapshot, because skipped locs live nowhere else on
+        # disk and resume needs them.
+        enqueued = annotated.select("loc").localCheckpoint(eager=True)
+        enqueued.write.mode("overwrite").parquet(
+            os.path.join(st.ckpt_root, "enqueued0"))
+    st.metrics.append({"batch": -1, "event": "plan", "skips": skips,
+                       "sec_frontier_purge": round(t_purge - t0, 3),
+                       "sec_annotate":
+                       round(time.perf_counter() - t_purge, 3)})
+
+    # robots Crawl-delay (de-facto REP extension) raises a host's
+    # effective sleeptime above the site config's value
+    delays = (robots.robots_crawl_delays(world["robots"])
+              if world.get("robots") is not None else None)
+    st.host_state = politeness.initial_host_state(
+        st.remaining, st.sdf, crawl_delays=delays).localCheckpoint(
+            eager=True)
+    st.ckpt_writer = _BgTask(_write_ckpt, st.ckpt_root, -1, st.remaining,
+                             st.host_state)
+    st.purge_writer.join()
+    # both consumers of the parsed-entries intermediate (purge,
+    # annotate) are done — drop it with the frontier caches
+    for df in scratch:
+        df.unpersist()
+    annotated.unpersist()
+    frontier.unpersist()
+    return enqueued, idx_filter
+
+
+def _start_discovery(st: CrawlState, sites: list, world_dir: str,
+                     enqueued: DataFrame, index0_filter) -> None:
+    """Set up the discover step over the enqueued set (a checkpointed
+    relation of every loc ever put on the frontier)."""
+    from urllib.parse import urlsplit
+
+    # host → site dim for scoping + site_id assignment of discovered
+    # urls (two sites on one host: min site_id wins, deterministically).
+    # Keyed on the HOSTNAME (no port) so it joins the same lower(parse_url
+    # HOST) derivation sitemap rows, host_state and _annotate_discovered
+    # use — all ports of a host are one politeness host
+    host_site: dict[str, int] = {}
+    for s in sites:
+        h = (urlsplit(s.url).hostname or "").lower()
+        host_site[h] = min(host_site.get(h, s.site_id), s.site_id)
+    st.host_dim = st.spark.createDataFrame(
+        sorted(host_site.items()), "host string, site_id int")
+    # discovered rows annotate against the immutable PRE-RUN index
+    # (world index0): sink.base_path is rewritten by mid-run compaction.
+    # A fresh run hands over the plan's filter — the base snapshot is a
+    # verbatim copy of index0, so url set and geometry match
+    st.index0_rows = _parquet_rows(f"{world_dir}/index0.parquet")
+    st.index0_filter = index0_filter
+    st.enqueued = enqueued
+    # geometry pinned once, sized 4× the initial set (a production run
+    # budgets its expected discovery volume here); sizing overflow
+    # stays exact through the anti-join backstop in
+    # candidates_from_links
+    st.enq_filter = seen.IncrementalUrlFilter(
+        enqueued.select(canonical_url_col(F.col("loc")).alias("url")),
+        "url", expected_items=max(4 * enqueued.count(), 1024), fpp=0.03)
+
+
+def _crawl_batches(st: CrawlState, config: cfg.CrawlerConfig,
+                   crawl_time: datetime, compact_every: int | None,
+                   max_batches: int | None) -> None:
+    """The batch loop. The next schedule is prefetched while the
+    current batch extracts: right after the state transition, or — when
+    the discover step is present — after extraction, since it depends
+    on this batch's outlinks."""
+    st.pending = _BgTask(_schedule, st)
+    n_batches = 0
+    while True:
+        t0 = time.perf_counter()
+        batch, per_host = st.pending.join()
+        _commit(st)
+        admitted = sum(per_host.values())
+        # empty schedule ⇒ remaining frontier is exhausted (capacity is
+        # ≥1 per host, so a non-empty frontier always admits rows)
+        if admitted == 0 or (max_batches is not None
+                             and n_batches >= max_batches):
+            batch.unpersist()
+            break
+        _transition(st, batch)
+        if not st.discovering:
+            st.pending = _BgTask(_schedule, st)
+        t_sched = time.perf_counter()
+
+        docs = _extract_sink(st, batch, config, crawl_time)
+        # count from the written delta's parquet FOOTERS, driver-side —
+        # a docs.count() would re-run the whole extraction stage
+        indexed = _parquet_rows(
+            os.path.join(st.sink.delta_root, f"batch={st.batch_id}"))
+        if st.discovering:
+            st.pending = _BgTask(_discover_schedule, st, docs)
+        t_extract = time.perf_counter()
+
+        # MOR maintenance: fold the delta log into the base when it
+        # exceeds the generation or byte budget (read-side LWW window
+        # stays bounded however long the crawl runs)
+        compacted = st.sink.should_compact(compact_every)
+        if compacted:
+            st.sink.compact()
+        st.metrics.append({"batch": st.batch_id, "admitted": admitted,
+                           "indexed": indexed, "compacted": compacted,
+                           "per_host_admitted": per_host,
+                           "sec_schedule": round(t_sched - t0, 3),
+                           "sec_extract_sink":
+                           round(t_extract - t_sched, 3),
+                           "sec_checkpoint":
+                           round(time.perf_counter() - t_extract, 3)})
+        _flush_metrics(st)
+        batch.unpersist()
+        st.batch_id += 1
+        n_batches += 1
+    if st.ckpt_writer is not None:
+        st.ckpt_writer.join()
+    # the final batch's discovery event lands after its per-batch
+    # flush — flush the tail so the on-disk metrics match
+    # CrawlResult.metrics and a later resume keeps it
+    _flush_metrics(st)
+
+
+def _schedule(st: CrawlState):
+    """Schedule step: materialize one politeness batch plus its
+    admission metric — ONE job fills the cache AND yields the per-host
+    counts (north-rule lineage metric). Runs on the prefetch thread: the
+    schedule is a pure function of (remaining, host_state), both known
+    before the previous batch extracts."""
+    b = politeness.select_batch(st.remaining, st.host_state,
+                                st.batch_seconds,
+                                order_mode=st.order_mode).cache()
+    ph = {r["host"]: r["n"] for r in
+          b.groupBy("host").agg(F.count(F.lit(1)).alias("n")).collect()}
+    return b, ph
+
+
+def _transition(st: CrawlState, batch: DataFrame) -> None:
+    """State transition of the current batch — a pure function of it
+    (politeness 429 doubling + the processed-set anti-join), so it runs
+    before extraction and the next schedule can be prefetched meanwhile.
+    The tiny localCheckpoints pin the exact rows the prefetch and the
+    checkpoint writer consume. Stages the batch's checkpoint."""
+    hs_prev = st.host_state  # the delta writer keeps only changed hosts
+    st.host_state = politeness.updated_host_state(
+        st.host_state, batch.filter(F.col("n_429") > 0)
+    ).localCheckpoint(eager=True)
+    is_full = st.batch_id - st.last_full >= st.ckpt_full_every
+    if is_full:
+        # periodic full snapshot: the localCheckpoint truncates the
+        # anti-join lineage chain executor-side
+        st.remaining = st.remaining.join(
+            batch.select("crawl_seq"), "crawl_seq", "left_anti"
+        ).localCheckpoint(eager=True)
+        processed = None
+        st.last_full = st.batch_id
+    else:
+        processed = batch.select("crawl_seq").localCheckpoint(eager=True)
+        st.remaining = st.remaining.join(processed, "crawl_seq",
+                                         "left_anti")
+    st.staged = (st.batch_id, is_full, processed, hs_prev)
+
+
+def _extract_sink(st: CrawlState, batch: DataFrame,
+                  config: cfg.CrawlerConfig,
+                  crawl_time: datetime) -> DataFrame:
+    """Extract+sink step: fetch join → extraction → upsert append.
+    Returns the extracted docs; with the discover step present they
+    carry ``__outlinks`` and stay cached (the sink write fills the
+    cache and discovery reads it — page bytes are read and DOM-parsed
+    once per batch; the discover step releases it)."""
+    resources = _batch_resources(batch, st.world, st.sdf)
+    # extraction is CPU-dense per byte (one DOM parse per row); AQE's
+    # byte-based coalescing would pack the whole batch into a few
+    # partitions and idle the cluster — spread it explicitly
+    resources = resources.repartition(
+        st.spark.sparkContext.defaultParallelism)
+    docs = extract_documents(
+        resources, config, crawl_time,
+        passthrough=("crawl_seq", "site_id", "__csid"),
+        emit_outlinks=st.discovering)
+    # crawler_site_id injection (main.py:152-153)
+    docs = (docs.withColumn("crawler_site_id", F.col("__csid"))
+            .drop("__csid")
+            .withColumn("op_seq", F.col("crawl_seq"))
+            .withColumn("batch_id", F.lit(st.batch_id))
+            .withColumn("url", F.col(config.url_field)))
+    if config.unique_field != "UID":
+        docs = docs.withColumn("UID", F.col(config.unique_field))
+    if st.discovering:
+        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    st.sink.append_upserts(docs.drop("__outlinks"), st.batch_id)
+    return docs
+
+
+def _discover_schedule(st: CrawlState, docs: DataFrame):
+    """Discover step, then the next schedule — one prefetch unit, so the
+    schedule stays a pure function of the post-discovery frontier
+    (resume replays it exactly). The batch's outlinks are split against
+    the enqueued set, annotated like sitemap rows, admitted (counted and
+    added to the enqueued filter in one job where the filter's form
+    allows) and unioned into ``remaining``."""
+    links = docs.select(F.col("url").alias("src_url"),
+                        F.explode("__outlinks").alias("dst_url"))
+    cand = linkgraph.candidates_from_links(
+        links, st.enqueued, known_url_col="loc",
+        scope_hosts=st.host_dim.select("host"), drop_traps=True,
+        known_bloom=st.enq_filter)
+    if st.index0_filter is None:
+        # lazy: a resumed run that never discovers skips the O(index)
+        # build; built once, then shared by every discovering batch
+        st.index0_filter = seen.IncrementalUrlFilter(
+            st.world["index0"].select("url"), "url",
+            expected_items=st.index0_rows)
+    # lazy checkpoint: the admission job below materializes it, so
+    # plan-run + checkpoint + counts are ONE job
+    ann = _annotate_discovered(
+        cand, st.world, st.sdf, st.host_dim, st.force,
+        index_filter=st.index0_filter,
+        not_due=st.not_due).localCheckpoint(eager=False)
+    n_new, n_disc = st.enq_filter.admit(
+        ann.withColumn("__curl", canonical_url_col(F.col("loc"))),
+        "__curl", "skip_reason")
+    docs.unpersist()
+    disc = None
+    if n_new:
+        # lazy union of checkpointed segments — no frontier-sized copy
+        # per batch; an eager compaction every ckpt_full_every segments
+        # bounds the union fan-in
+        st.enqueued = st.enqueued.unionByName(ann.select("loc"))
+        st.enq_segments += 1
+        if st.enq_segments >= st.ckpt_full_every:
+            st.enqueued = st.enqueued.localCheckpoint(eager=True)
+            st.enq_segments = 0
+    if n_disc:
+        # a plain filter over ann's checkpointed blocks; the full-
+        # checkpoint cadence compacts `remaining`
+        disc = (ann.filter(F.col("skip_reason").isNull())
+                .select(*st.remaining.columns))
+        st.remaining = st.remaining.unionByName(disc)
+    st.found = (disc, n_new, n_disc)
+    return _schedule(st)
+
+
+def _commit(st: CrawlState) -> None:
+    """Commit step: write the staged checkpoint of the last batch, now
+    that its discoveries (if any) are known — a full snapshot includes
+    the grown frontier, a delta carries the discovered rows the resume
+    replay must re-add. One writer outstanding at a time: batch K's
+    marker is written before batch K+1's, so the committed batches are
+    always a prefix (resume's delta replay assumes it)."""
+    if st.staged is None:
+        return
+    bid, is_full, processed, hs_prev = st.staged
+    disc, n_cand, n_disc = st.found or (None, 0, 0)
+    st.staged = st.found = None
+    if n_cand or n_disc:
+        st.metrics.append({"batch": bid, "event": "discovery",
+                           "candidates": n_cand, "enqueued": n_disc})
+    if st.ckpt_writer is not None:
+        st.ckpt_writer.join()
+    if is_full:
+        st.ckpt_writer = _BgTask(_write_ckpt, st.ckpt_root, bid,
+                                 st.remaining, st.host_state)
+    else:
+        st.ckpt_writer = _BgTask(_write_delta_ckpt, st.ckpt_root, bid,
+                                 processed, st.host_state, disc, hs_prev)
+
+
+def _flush_metrics(st: CrawlState) -> None:
+    """Append the metrics rows not yet on disk to metrics.jsonl:
+    O(new rows) per call, never a rewrite of the whole history."""
+    if st.flushed == len(st.metrics):
+        return
+    with open(os.path.join(st.out_dir, "metrics.jsonl"), "ab+") as fh:
+        # repair a torn tail (crash mid-append left no newline): without
+        # this the next row glues onto the fragment and BOTH lines are
+        # lost to the loader's torn-line skip
+        fh.seek(0, os.SEEK_END)
+        if fh.tell() > 0:
+            fh.seek(-1, os.SEEK_END)
+            if fh.read(1) != b"\n":
+                fh.write(b"\n")
+        for m in st.metrics[st.flushed:]:
+            fh.write((json.dumps(m) + "\n").encode())
+    st.flushed = len(st.metrics)
 
 
 class _BgTask:
@@ -1085,31 +953,18 @@ def _write_ckpt(root: str, batch_id: int, remaining: DataFrame,
 
 
 def _ckpt_kind(root: str, batch_id: int) -> str:
-    """'full' | 'delta' for a COMMITTED batch dir. The kind is recorded
-    in the _COMMIT marker at commit time — the full-vs-delta decision
-    must never be re-derived from directory layout or from the current
-    ``ckpt_full_every`` argument: a crash can leave a torn ``remaining``
-    dir inside a batch that later committed as a delta, and a resume
+    """'full' | 'delta' for a COMMITTED batch dir, as recorded in its
+    _COMMIT marker at commit time — never re-derived from directory
+    layout or from the current ``ckpt_full_every`` argument: a resume
     with a different cadence must still classify historical batches
-    correctly. Legacy markers (pre-kind, body 'ok') fall back to
-    requiring a COMPLETE parquet write (``remaining/_SUCCESS``), so a
-    torn snapshot is never adopted as a frontier."""
-    d = os.path.join(root, f"batch={batch_id}")
-    with open(os.path.join(d, "_COMMIT")) as fh:
-        kind = fh.read().strip()
-    if kind in ("full", "delta"):
-        return kind
-    return ("full" if os.path.exists(
-        os.path.join(d, "remaining", "_SUCCESS")) else "delta")
+    correctly."""
+    with open(os.path.join(root, f"batch={batch_id}", "_COMMIT")) as fh:
+        return fh.read().strip()
 
 
 def _read_ckpt(spark: SparkSession, root: str, batch_id: int):
-    d = os.path.join(root, f"batch={batch_id}")
-    if os.path.isdir(os.path.join(d, "remaining")):
-        # legacy two-file layout (pre combined-write checkpoints)
-        return (spark.read.parquet(os.path.join(d, "remaining")),
-                spark.read.parquet(os.path.join(d, "host_state")))
-    st = spark.read.parquet(os.path.join(d, "state"))
+    st = spark.read.parquet(os.path.join(root, f"batch={batch_id}",
+                                         "state"))
     return (st.filter(F.col("crawl_seq").isNotNull())
             .drop("__hs_sleeptime"),
             st.filter(F.col("crawl_seq").isNull())
@@ -1138,8 +993,7 @@ def _write_delta_ckpt(root: str, batch_id: int, processed: DataFrame,
     at 10^8 hosts a full copy per delta is O(hosts × batches) write
     amplification for state that is immutable outside 429s. Resume
     overlays delta host rows onto the last full snapshot last-wins per
-    host (_resume_state), which reads full-relation legacy deltas and
-    changed-only deltas identically."""
+    host (_resume_state)."""
     d = os.path.join(root, f"batch={batch_id}")
     hs = host_state
     if prev_host_state is not None:
@@ -1166,108 +1020,77 @@ def _write_delta_ckpt(root: str, batch_id: int, processed: DataFrame,
         fh.write("delta")
 
 
-def _read_delta_ckpt(spark: SparkSession, root: str, batch_id: int):
-    d = os.path.join(root, f"batch={batch_id}")
-    if not os.path.isdir(os.path.join(d, "state")):
-        # legacy two-file delta layout (pre combined-write checkpoints):
-        # processed/ + host_state/ dirs — mirror _read_ckpt's legacy
-        # branch so a resume spanning an upgrade never hits
-        # path-not-found on old deltas
-        return (spark.read.parquet(os.path.join(d, "processed"))
-                .select("crawl_seq"),
-                spark.read.parquet(os.path.join(d, "host_state"))
-                .select("host", "sleeptime"))
-    st = spark.read.parquet(os.path.join(d, "state"))
-    proc = st.filter(F.col("crawl_seq").isNotNull())
-    if "loc" in st.columns:
-        # follow-links deltas also carry discovered frontier rows
-        # (crawl_seq AND loc non-null) — not part of the processed set
-        proc = proc.filter(F.col("loc").isNull())
-    return (proc.select("crawl_seq"),
-            st.filter(F.col("crawl_seq").isNull())
-            .select("host", "sleeptime"))
-
-
-def _resume_state(spark: SparkSession, root: str, committed: list):
+def _resume_state(spark: SparkSession, root: str, committed: list,
+                  follow_links: bool = False):
     """Reconstruct (remaining, host_state, last_full) from the last
-    committed full snapshot plus the processed deltas after it. Batch
-    kind comes from the _COMMIT marker (``_ckpt_kind``), never from
-    directory layout — a torn 'remaining' dir from a crashed full-
-    snapshot attempt inside a delta-committed batch must not be
-    adopted as a frontier."""
-    last = committed[-1]
-    fulls = [b for b in committed if _ckpt_kind(root, b) == "full"]
-    last_full = max(b for b in fulls if b <= last)
-    remaining, full_hs = _read_ckpt(spark, root, last_full)
-    delta_ids = [b for b in committed if last_full < b <= last]
-    if delta_ids:
-        # a resume may span an upgrade: read combined-state deltas in
-        # one bulk scan, but fall back per batch to the legacy
-        # processed/ dir when state/ is absent (mirrors _read_ckpt's
-        # legacy branch — _read_delta_ckpt has the same fallback)
-        state_paths = [os.path.join(root, f"batch={b}", "state")
-                       for b in delta_ids]
-        legacy = [os.path.join(root, f"batch={b}", "processed")
-                  for b, p in zip(delta_ids, state_paths)
-                  if not os.path.isdir(p)]
-        processed = None
-        # host-state overlay sources, each row tagged with its batch id
-        # (parsed from the file path): deltas persist only the host
-        # rows that CHANGED at their batch (legacy deltas carry the
-        # full relation — the last-wins fold reads both identically)
-        hs_rows = [full_hs.select(
-            "host", "sleeptime", F.lit(last_full).alias("__b"))]
-        # anchored to the state dir segment: a bare "batch=(\d+)/"
-        # would match the FIRST occurrence in the path, so an out_dir
-        # that itself contains a batch=<n>/ directory would mis-tag
-        # every row with that foreign id
-        _bid = F.regexp_extract(
-            F.input_file_name(),
-            r"batch=(-?\d+)/(?:state|host_state)/", 1).cast("long")
-        modern = [p for p in state_paths if os.path.isdir(p)]
-        if modern:
-            # mergeSchema: follow-links deltas carry the full annotated
-            # frontier schema for discovered rows; plain deltas carry
-            # only (crawl_seq, host, sleeptime) — a resume may span
-            # both
-            st = (spark.read.option("mergeSchema", "true")
-                  .parquet(*modern).withColumn("__b", _bid))
-            hs_rows.append(st.filter(F.col("crawl_seq").isNull())
-                           .select("host", "sleeptime", "__b"))
-            proc = st.filter(F.col("crawl_seq").isNotNull())
-            if "loc" in st.columns:
-                # discovered rows (crawl_seq AND loc non-null) GROW the
-                # frontier between fulls — re-add them before the
-                # processed anti-join (a discovered row later processed
-                # is removed by the anti-join as usual)
-                disc = st.filter(F.col("crawl_seq").isNotNull()
-                                 & F.col("loc").isNotNull())
-                remaining = remaining.unionByName(
-                    disc.select(*remaining.columns))
-                proc = proc.filter(F.col("loc").isNull())
-            processed = proc.select("crawl_seq")
-        if legacy:
-            old = spark.read.parquet(*legacy).select("crawl_seq")
-            processed = (old if processed is None
-                         else processed.unionByName(old))
-            legacy_hs = [os.path.join(os.path.dirname(p), "host_state")
-                         for p in legacy]
-            legacy_hs = [p for p in legacy_hs if os.path.isdir(p)]
-            if legacy_hs:
-                hs_rows.append(spark.read.parquet(*legacy_hs)
-                               .withColumn("__b", _bid)
-                               .select("host", "sleeptime", "__b"))
-        remaining = remaining.join(processed, "crawl_seq", "left_anti")
-    if last == last_full:
-        host_state = full_hs
-    else:
-        hs_all = hs_rows[0]
-        for extra in hs_rows[1:]:
-            hs_all = hs_all.unionByName(extra)
-        host_state = (hs_all.groupBy("host")
+    committed full snapshot plus the deltas after it. With
+    ``follow_links`` a fourth item is the enqueued set (with
+    duplicates): ``enqueued0`` (every annotated plan-phase loc,
+    skipped ones included), the frontier of every full after -1 (rows
+    still pending then, discovered ones included) and the rows every
+    delta discovered — so every enqueued url is on disk whenever it was
+    crawled. Discovered-but-skipped candidates are the only
+    under-approximation: they re-annotate exactly as on first discovery
+    → the same skip, never a crawl. (``sink.current()`` would
+    over-approximate: failed-site docs survive the purge without ever
+    being enqueued, and seeding them would DROP candidates an
+    uninterrupted run crawls.)"""
+    kinds = {b: _ckpt_kind(root, b) for b in committed}
+    last_full = max(b for b in committed if kinds[b] == "full")
+    remaining, host_state = _read_ckpt(spark, root, last_full)
+    enqueued = None
+    if follow_links:
+        enqueued = spark.read.parquet(os.path.join(root, "enqueued0"))
+        for b in committed:
+            if kinds[b] == "full" and b >= 0:
+                rows = (remaining if b == last_full
+                        else _read_ckpt(spark, root, b)[0])
+                enqueued = enqueued.unionByName(rows.select("loc"))
+    deltas = [b for b in committed if kinds[b] == "delta"
+              and (follow_links or b > last_full)]
+    if deltas:
+        # one scan over every delta needed; each row tagged with its
+        # batch id, parsed from the file path (anchored to the state
+        # dir segment: a bare "batch=(\d+)/" would match an out_dir
+        # that itself contains a batch=<n>/ directory). mergeSchema:
+        # follow-links deltas carry the full annotated frontier schema
+        # for discovered rows, plain ones only (crawl_seq, host,
+        # sleeptime)
+        st = (spark.read.option("mergeSchema", "true")
+              .parquet(*[os.path.join(root, f"batch={b}", "state")
+                         for b in deltas])
+              .withColumn("__b", F.regexp_extract(
+                  F.input_file_name(), r"batch=(-?\d+)/state/", 1)
+                  .cast("long")))
+        after = st.filter(F.col("__b") > last_full)
+        processed = after.filter(F.col("crawl_seq").isNotNull())
+        if "loc" in st.columns:
+            # discovered rows (crawl_seq AND loc non-null) GROW the
+            # frontier between fulls — re-add them before the processed
+            # anti-join (a discovered row later processed is removed by
+            # the anti-join as usual)
+            disc = st.filter(F.col("crawl_seq").isNotNull()
+                             & F.col("loc").isNotNull())
+            if follow_links:
+                enqueued = enqueued.unionByName(disc.select("loc"))
+            remaining = remaining.unionByName(
+                disc.filter(F.col("__b") > last_full)
+                .select(*remaining.columns))
+            processed = processed.filter(F.col("loc").isNull())
+        remaining = remaining.join(processed.select("crawl_seq"),
+                                   "crawl_seq", "left_anti")
+    if committed[-1] > last_full:
+        # deltas persist only the host rows that CHANGED at their
+        # batch: overlay them onto the full snapshot, last wins
+        host_state = (host_state.withColumn("__b", F.lit(last_full))
+                      .unionByName(after.filter(
+                          F.col("crawl_seq").isNull())
+                          .select("host", "sleeptime", "__b"))
+                      .groupBy("host")
                       .agg(F.max_by("sleeptime", "__b")
                            .alias("sleeptime")))
-    return remaining, host_state, last_full
+    out = (remaining, host_state, last_full)
+    return out + (enqueued,) if follow_links else out
 
 
 def _committed_batches(root: str) -> list:

@@ -255,6 +255,43 @@ def test_resume_ignores_uncommitted_checkpoint(spark, world, engine_run,
     assert a == b
 
 
+def _uids(result):
+    return {r["UID"] for r in result.index().select("UID").collect()}
+
+
+def test_restart_before_first_commit_keeps_purge(spark, world,
+                                                 oracle_run,
+                                                 tmp_path_factory):
+    """Crash window of the plan step: the purge tombstones are durable
+    but the batch -1 marker is not, so the restart is a fresh run. It
+    must purge again against the pre-run base snapshot — reading the
+    previous attempt's tombstones as an already-purged index finds
+    nothing to purge and overwrites them, resurrecting removed docs."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("plancrash"))
+    run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
+              batch_seconds=5.0, max_batches=0)
+    os.remove(os.path.join(out, "checkpoints", "batch=-1", "_COMMIT"))
+    r = run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
+                  batch_seconds=5.0)
+    assert _uids(r) == set(oracle_run["index"])
+
+
+def test_fresh_run_over_finished_run(spark, world, engine_run,
+                                     oracle_run, tmp_path_factory):
+    """resume=False into the out_dir of a finished run starts over from
+    an empty delta log and checkpoint dir: the final index is the
+    oracle's, with every purged doc still gone."""
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("freshover"))
+    shutil.copytree(engine_run.out_dir, out, dirs_exist_ok=True)
+    r = run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
+                  batch_seconds=5.0, resume=False)
+    assert _uids(r) == set(oracle_run["index"])
+
+
 def test_relation_bloom_path_same_final_state(spark, world, engine_run,
                                               tmp_path_factory,
                                               monkeypatch):
@@ -275,74 +312,6 @@ def test_relation_bloom_path_same_final_state(spark, world, engine_run,
     b = {(r["UID"], r["url"], r["crawl_seq"], r["batch_id"])
          for r in _crawled(rel_run)
          .select("UID", "url", "crawl_seq", "batch_id").collect()}
-    assert a == b
-
-
-def test_resume_reads_legacy_two_file_checkpoint(spark, world,
-                                                 engine_run,
-                                                 tmp_path_factory):
-    """Checkpoints written by the pre-combined-write layout (separate
-    remaining/ + host_state/ parquet dirs, marker body 'ok') must
-    still resume — a long crawl can crash mid-upgrade."""
-    import os
-    import shutil
-
-    from ftw_crawler_spark.plans.crawl import _read_ckpt
-
-    out = str(tmp_path_factory.mktemp("legacy"))
-    run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-              batch_seconds=5.0, max_batches=1)
-    d = os.path.join(out, "checkpoints", "batch=-1")
-    remaining, host_state = _read_ckpt(spark, out + "/checkpoints", -1)
-    remaining = remaining.localCheckpoint()       # read before rewrite
-    host_state = host_state.localCheckpoint()
-    shutil.rmtree(os.path.join(d, "state"))
-    remaining.write.parquet(os.path.join(d, "remaining"))
-    host_state.write.parquet(os.path.join(d, "host_state"))
-    with open(os.path.join(d, "_COMMIT"), "w") as fh:
-        fh.write("ok")                            # legacy marker body
-    resumed = run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-                        batch_seconds=5.0, resume=True)
-    a = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(engine_run).select("url", "crawl_seq").collect()}
-    b = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(resumed).select("url", "crawl_seq").collect()}
-    assert a == b
-
-
-def test_resume_reads_legacy_delta_checkpoint(spark, world, engine_run,
-                                              tmp_path_factory):
-    """Pre-upgrade DELTA checkpoints used separate processed/ +
-    host_state/ dirs (marker body 'ok'). A crawl crashed mid-upgrade
-    can hold legacy deltas AFTER its last full snapshot — both the
-    bulk delta replay (_resume_state) and the host-state read
-    (_read_delta_ckpt) must fall back per batch."""
-    import os
-    import shutil
-
-    from ftw_crawler_spark.plans.crawl import _read_delta_ckpt
-
-    out = str(tmp_path_factory.mktemp("legacydelta"))
-    run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-              batch_seconds=5.0, max_batches=2)
-    ckpt = os.path.join(out, "checkpoints")
-    # convert the LAST committed delta (batch=1) to the legacy layout —
-    # exercises both the _resume_state replay and the host-state path
-    d = os.path.join(ckpt, "batch=1")
-    processed, host_state = _read_delta_ckpt(spark, ckpt, 1)
-    processed = processed.localCheckpoint()       # read before rewrite
-    host_state = host_state.localCheckpoint()
-    shutil.rmtree(os.path.join(d, "state"))
-    processed.write.parquet(os.path.join(d, "processed"))
-    host_state.write.parquet(os.path.join(d, "host_state"))
-    with open(os.path.join(d, "_COMMIT"), "w") as fh:
-        fh.write("ok")                            # legacy marker body
-    resumed = run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-                        batch_seconds=5.0, resume=True)
-    a = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(engine_run).select("url", "crawl_seq").collect()}
-    b = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(resumed).select("url", "crawl_seq").collect()}
     assert a == b
 
 
