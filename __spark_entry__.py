@@ -2964,16 +2964,13 @@ def _multimodal_meta(spark, sf_dir):
       multimodal_frame_sample query for the roster cap);
     - audio_meta + audio_windows: the audio leg's decode plumbing
       (sample_rate, n_channels, n_samples) and window sampling
-      (j < 2 carries audio_window_hash) — same mapInPandas shape; the
-      real-WAV codec path (functions/audiocodec.py) is pinned by
-      test_audiocodec against a row-wise oracle.
+      (j < 2 carries audio_window_hash) — same mapInPandas shape.
 
-    The codec is a deterministic fake (sandbox has no image libs —
-    multimodal.decode_image is the honest NotImplementedError hook);
-    the distributed path (schemas, Arrow batch shapes, partitioning)
-    is real. The per-doc joins are small-key equi-joins at check
-    scale; production keeps the three derivations fused in one
-    mapInPandas pass instead."""
+    The codec is a deterministic md5-derived fake (a real decoder
+    swaps into each stage's per-row body); the distributed path
+    (schemas, Arrow batch shapes, partitioning) is real. The per-doc
+    joins are small-key equi-joins at check scale; production keeps the
+    three derivations fused in one mapInPandas pass instead."""
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "UTF-8").alias("blob"))
     meta = multimodal.blob_meta(docs)

@@ -17,7 +17,7 @@ DataFrame plans + vectorized pandas/Arrow UDFs:
   sites, sitemaps, pre-existing index) and readers.
 - ``plans/``      the crawl micro-batch driver loop with per-batch
   checkpoints, lineage and metrics.
-- ``streaming/``  generic micro-batch/state helpers.
+- ``streaming/``  the streaming near-dup admission gate (``DedupStream``).
 """
 
 __version__ = "0.1.0"

@@ -13,8 +13,7 @@ Scale notes per operator:
 - minhash-LSH: signatures are per-row expressions (no shuffle); the
   band join shuffles on (band_idx, band_hash) — bucket sizes are
   bounded by collision probability, and the candidate verify is a
-  narrow pair join. A production path can swap the md5 perm hash for
-  ``xxhash64(shingle, i)`` (cheaper, Spark-only) via ``use_md5=False``.
+  narrow pair join.
 - n-gram Jaccard: inverted-index self-join on shingle hash; add a
   document-frequency cutoff (``max_df``) at scale to drop
   stop-shingles that would quadratically blow up a bucket.
@@ -128,8 +127,7 @@ def drop_exact_dups(docs: DataFrame, text_col: str = "text",
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id",
-                       n_perm: int = DEFAULT_N_PERM,
-                       use_md5: bool = True) -> DataFrame:
+                       n_perm: int = DEFAULT_N_PERM) -> DataFrame:
     """(id, mh_0..mh_{n-1}): minhash signature via explode → one base
     hash + affine permutation family per shingle row (whole-stage
     codegen) → map-side-combined min-aggregation on the doc id.
@@ -142,20 +140,15 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     toks = tokens_col(text_col)
     sh = F.array_distinct(shingles_col(toks))
     ex = docs.select(F.col(id_col), F.explode(sh).alias("__s"))
-    if use_md5:
-        # one engine-neutral base hash per shingle, then the affine
-        # permutation family — n_perm multiply-add-mods in codegen
-        # instead of n_perm md5 calls per shingle row
-        x = md5_long(F.col("__s")).bitwiseAND(F.lit(MINHASH_MASK))
-        hashed = ex.withColumn("__x", x).select(
-            id_col, *[((F.lit(a) * F.col("__x") + F.lit(b))
-                       % F.lit(MINHASH_P)).alias(f"__h{i}")
-                      for i, (a, b) in
-                      enumerate(_minhash_consts(n_perm))])
-    else:
-        hcols = [F.xxhash64(F.col("__s"), F.lit(i)).alias(f"__h{i}")
-                 for i in range(n_perm)]
-        hashed = ex.select(id_col, *hcols)
+    # one engine-neutral base hash per shingle, then the affine
+    # permutation family — n_perm multiply-add-mods in codegen
+    # instead of n_perm md5 calls per shingle row
+    x = md5_long(F.col("__s")).bitwiseAND(F.lit(MINHASH_MASK))
+    hashed = ex.withColumn("__x", x).select(
+        id_col, *[((F.lit(a) * F.col("__x") + F.lit(b))
+                   % F.lit(MINHASH_P)).alias(f"__h{i}")
+                  for i, (a, b) in
+                  enumerate(_minhash_consts(n_perm))])
     return hashed.groupBy(id_col).agg(
         *[F.min(f"__h{i}").alias(f"mh_{i}") for i in range(n_perm)])
 
@@ -163,13 +156,12 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 def minhash_bands(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id",
                   n_perm: int = DEFAULT_N_PERM,
-                  bands: int = DEFAULT_BANDS,
-                  use_md5: bool = True) -> DataFrame:
+                  bands: int = DEFAULT_BANDS) -> DataFrame:
     """(id, band_idx, band_hash): md5 of the ':'-joined signature slice
     per band. Docs with no shingles (< w tokens) are excluded (their
     signature is undefined — min of empty; explode drops them)."""
     r = n_perm // bands
-    sig = minhash_signatures(docs, text_col, id_col, n_perm, use_md5)
+    sig = minhash_signatures(docs, text_col, id_col, n_perm)
     band_cols = []
     for b in range(bands):
         parts = [F.col(f"mh_{b * r + j}").cast("string")
@@ -186,14 +178,13 @@ def minhash_bands(docs: DataFrame, text_col: str = "text",
 def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id",
                             n_perm: int = DEFAULT_N_PERM,
-                            bands: int = DEFAULT_BANDS,
-                            use_md5: bool = True) -> DataFrame:
+                            bands: int = DEFAULT_BANDS) -> DataFrame:
     """LSH candidates: distinct (a < b) pairs sharing ≥1 band bucket.
     Shuffle key = (band_idx, band_hash). The band table is
     localCheckpoint'd so the self-join computes signatures ONCE (plain
     self-join lineage would run the whole minhash pipeline twice)."""
-    bands_df = minhash_bands(docs, text_col, id_col, n_perm, bands,
-                             use_md5).localCheckpoint(eager=False)
+    bands_df = minhash_bands(docs, text_col, id_col, n_perm,
+                             bands).localCheckpoint(eager=False)
     a = bands_df.select(F.col(id_col).alias("a"), "band_idx",
                         "band_hash")
     b = bands_df.select(F.col(id_col).alias("b"), "band_idx",
@@ -363,7 +354,6 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
 def connected_components(pairs: DataFrame, a_col: str = "a",
                          b_col: str = "b",
                          max_iter: int = 50,
-                         algorithm: str = "auto",
                          stats: dict | None = None) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``;
     ``component`` is the minimum node id of its connected component.
@@ -373,44 +363,38 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     clusters: keep ``node == component`` as the canonical doc, drop
     the rest.
 
-    ``algorithm``:
+    Two regimes, chosen from what the run observes:
 
-    - ``"propagation"``: iterative min-label propagation —
-      each round joins the (undirected) edge list against the current
-      labels and takes the per-node min. One label shuffle per round;
-      rounds = graph diameter. The right tool for near-dup graphs,
-      which are dense near-cliques (diameter ≤ ~4).
-    - ``"pointer_doubling"``: each round ALSO shortcuts labels through
+    - propagation: iterative min-label propagation — each round joins
+      the (undirected) edge list against the current labels and takes
+      the per-node min. One label shuffle per round; rounds = graph
+      diameter. The right tool for near-dup graphs, which are dense
+      near-cliques (diameter ≤ ~4).
+    - pointer doubling: each round ALSO shortcuts labels through
       themselves (L(v) ← min(L(v), L(L(v))) — a labels self-join),
       halving the remaining distance to the component minimum every
       round: O(log n) rounds on adversarial long-chain graphs where
       propagation needs O(diameter). Costs one extra shuffle per
       round, so it only wins when the diameter is large.
-    - ``"auto"`` (default): propagation rounds until a convergence
-      probe at round ≥ 4 still sees changes, then pointer doubling
-      for the rest. Near-dup cliques (diameter ≤ ~4) pay zero extra shuffles;
-      long transitive chains — whose diameter is unknowable before the
-      run at 10^10-edge scale — finish in the doubled regime's
-      O(log n) residual rounds instead of O(diameter). This is the
-      scale-right default choice when the graph shape is not known.
 
-    All modes produce identical labels (pinned by test_dedup_clusters):
-    every step only lowers a node's label toward (never past) its
-    component minimum, and the probe-detected fixpoint of any step mix
-    is that minimum — interleaving shortcut rounds changes the path,
-    not the fixpoint.
-    Mode-shared machinery:
-    the driver sees only a changed-row probe every 2nd round (label
+    Propagation runs until a convergence probe at round ≥ 4 still sees
+    changes, then pointer doubling runs the rest. Near-dup cliques
+    (diameter ≤ ~4) pay zero extra shuffles; long transitive chains —
+    whose diameter is unknowable before the run at 10^10-edge scale —
+    finish in the doubled regime's O(log n) residual rounds instead
+    of O(diameter).
+
+    Both regimes reach the same labels: every step only lowers a
+    node's label toward (never past) its component minimum, and the
+    probe-detected fixpoint of any step mix is that minimum —
+    interleaving shortcut rounds changes the path, not the fixpoint.
+    The driver sees only a changed-row probe every 2nd round (label
     change is monotone, so the fixpoint is detected at most one no-op
     round late while the fixed per-job latency halves), and lineage is
     truncated per round (localCheckpoint) — the same pattern as the
     k-means refinement loop. ``stats``, when given, receives
     {"rounds": n} for observability/tests.
     """
-    if algorithm not in ("propagation", "pointer_doubling", "auto"):
-        # fail loudly: a typo here would silently run the wrong
-        # round-complexity class on a 10^10-edge graph
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     edges = (pairs.select(F.col(a_col).alias("src"),
                           F.col(b_col).alias("dst"))
              .unionByName(pairs.select(F.col(b_col).alias("src"),
@@ -423,7 +407,7 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("component", F.col("node")))
     rounds = 0
-    doubling = algorithm == "pointer_doubling"
+    doubling = False
     for _ in range(max_iter):
         rounds += 1
         # min label over each node's neighbours, pre-aggregated before
@@ -470,7 +454,7 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
                        .limit(1).count())
             if changed == 0:
                 break
-            if algorithm == "auto" and rounds >= 4:
+            if rounds >= 4:
                 # still moving after the near-clique horizon: the graph
                 # has real diameter — switch to the doubled regime
                 doubling = True

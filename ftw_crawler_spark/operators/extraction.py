@@ -67,11 +67,6 @@ def md5_uuid_col(url_col: Column) -> Column:
         F.substring(h, 13, 4), F.substring(h, 17, 4), F.substring(h, 21, 12))
 
 
-def _content_type_col() -> Column:
-    # charset strip, utils.py:57-66 (split keeps token verbatim)
-    return F.split(F.col("headers")["content-type"], ";").getItem(0)
-
-
 def _mapping_case(source: Column, mapping: dict, default) -> Column:
     expr = None
     for k, v in mapping.items():

@@ -26,11 +26,8 @@ from pyspark.sql import functions as F
 
 # anchored (same convention as plans/crawl.py's checkpoint regex): a
 # stray dir that merely CONTAINS "batch=" must not be adopted as a log
-# generation. Two writer namespaces share the log: the batch planner's
-# ``batch=K`` and the streaming planner's ``batch=stream_000000NNN``
-# (frontier_stream.py:159) — the numeric part is the generation id in
-# both (each sink root has exactly one writer, so ids never collide)
-_BATCH_DIR_RE = re.compile(r"^batch=(?:stream_)?(-?\d+)(_deletes)?$")
+# generation
+_BATCH_DIR_RE = re.compile(r"^batch=(-?\d+)(_deletes)?$")
 
 
 def _dir_bytes(d: str) -> int:

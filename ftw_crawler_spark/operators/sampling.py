@@ -17,8 +17,7 @@ key on a content hash of a stable id, never on ``rand()``:
 
 The md5-based hash keeps every sample decision byte-reproducible in
 DuckDB/Python for the oracle gate (same trick as operators/dedup.py
-``md5_long``); ``use_md5=False`` swaps in ``xxhash64`` for the cheap
-production path.
+``md5_long``).
 """
 
 from __future__ import annotations
@@ -31,18 +30,16 @@ from ftw_crawler_spark.operators.dedup import md5_long
 PPM = 1_000_000
 
 
-def _sample_hash(key: Column, salt: str, use_md5: bool) -> Column:
-    if use_md5:
-        return md5_long(F.concat(F.lit(f"{salt}:"), key.cast("string")))
-    return F.xxhash64(key.cast("string"), F.lit(salt))
+def _sample_hash(key: Column, salt: str) -> Column:
+    return md5_long(F.concat(F.lit(f"{salt}:"), key.cast("string")))
 
 
 def hash_sample(df: DataFrame, key_col: str, rate_ppm: int,
-                salt: str = "s", use_md5: bool = True) -> DataFrame:
+                salt: str = "s") -> DataFrame:
     """Keep rows whose keyed hash lands below ``rate_ppm``/1e6 — a
     deterministic ~(rate_ppm/1e6) sample, stable across reruns and
     partitionings."""
-    h = _sample_hash(F.col(key_col), salt, use_md5)
+    h = _sample_hash(F.col(key_col), salt)
     return df.filter(F.pmod(h, F.lit(PPM)) < F.lit(rate_ppm))
 
 
@@ -64,7 +61,7 @@ def _pow_quarters(c: Column, q: int) -> Column:
 
 def mixture_sample(df: DataFrame, source_col: str, key_col: str,
                    target_rows: int, alpha_quarters: int = 2,
-                   salt: str = "m", use_md5: bool = True) -> DataFrame:
+                   salt: str = "m") -> DataFrame:
     """Temperature-weighted mixture sampling across sources — the
     multilingual/multi-source balancing step of a training-data
     pipeline (sample source s with weight ∝ count_s^α, α = q/4):
@@ -105,7 +102,7 @@ def mixture_sample(df: DataFrame, source_col: str, key_col: str,
                               * F.col("__c").cast("double"))), 6)
                        * F.lit(PPM)).cast("long"))
                .select(source_col, "p_ppm"))
-    h = _sample_hash(F.col(key_col), salt, use_md5)
+    h = _sample_hash(F.col(key_col), salt)
     return (df.join(F.broadcast(weights), source_col)
             .filter(F.pmod(h, F.lit(PPM)) < F.col("p_ppm")))
 
@@ -187,7 +184,6 @@ def dsir_select(docs: DataFrame, target: DataFrame, n: int,
 
 def stratified_sample(df: DataFrame, strata_col: str, key_col: str,
                       n_per_stratum: int, salt: str = "t",
-                      use_md5: bool = True,
                       salt_buckets: int | None = 16) -> DataFrame:
     """Exactly min(n, |stratum|) rows per stratum, chosen by hash order
     (deterministic per-stratum shuffle), hash then key as tie-break.
@@ -202,11 +198,8 @@ def stratified_sample(df: DataFrame, strata_col: str, key_col: str,
     row is by construction within its bucket's top-n, so the result is
     IDENTICAL to the single-window form (pinned by
     test_sampling's equivalence test). None disables the pre-phase."""
-    if use_md5:
-        order_key: Column = F.md5(
-            F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string")))
-    else:
-        order_key = _sample_hash(F.col(key_col), salt, False)
+    order_key = F.md5(
+        F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string")))
     order = [order_key, F.col(key_col)]
     if salt_buckets and salt_buckets > 1:
         w1 = Window.partitionBy(strata_col, "__salt").orderBy(*order)

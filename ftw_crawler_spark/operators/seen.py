@@ -173,7 +173,7 @@ def build_url_bloom(df: DataFrame, url_col: str = "url",
 
     ``shape=(n_bits, k, n_shards)`` pins the geometry so the result is
     OR-merge compatible with an existing filter (incremental per-batch
-    deltas, streaming/frontier_stream.py)."""
+    deltas, ``IncrementalUrlFilter.add``)."""
     shape = _resolve_shape(df, expected_items, fpp, shape, n_shards)
     parts = _shard_build_plan(df, url_col, shape).collect()
     return assemble_bloom_bytes(
@@ -425,8 +425,8 @@ class IncrementalUrlFilter:
     """Caller-maintained incremental seen filter: build ONCE over the
     initial url relation, grow with O(batch) deltas, serve in the
     size-appropriate form — all three decisions owned here so callers
-    (plans/crawl.py link discovery, streaming/frontier_stream.py) never
-    re-state the geometry/dispatch rules.
+    (plans/crawl.py link discovery and resume) never re-state the
+    geometry/dispatch rules.
 
     Geometry is pinned at construction (``expected_items`` budgets the
     url volume the filter will ever hold — a production run sizes this
@@ -444,7 +444,7 @@ class IncrementalUrlFilter:
     Relation-form block lifecycle: each ``add`` supersedes the previous
     full-filter copy, and waiting for driver GC / ContextCleaner to
     reclaim a superseded ~O(filter)-byte relation would stack stale
-    copies on a long-running stream. So inter-compaction copies are
+    copies on a long-running crawl. So inter-compaction copies are
     ``persist()``ed (public API, released explicitly the moment the
     successor is materialized) and every ``compact_every``-th add is a
     ``localCheckpoint`` that truncates the persisted lineage chain —

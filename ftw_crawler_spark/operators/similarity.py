@@ -6,12 +6,10 @@ retrieval. Two paths:
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
   The query side is tiny and **broadcast**; the corpus side streams.
-  Two math paths (``use_hof``): the default sequential fold
-  (``zip_with`` + ``aggregate`` — deterministic summation order,
-  bit-reproduced by DuckDB's list_dot_product: the ORACLE mode) and
-  an Arrow/numpy batch dot (``use_hof=False`` — the production fast
-  path; same plan shape, ~10-50× cheaper per pair, not bit-stable
-  across engines).
+  Every dot product is a sequential fold (``zip_with`` +
+  ``aggregate`` — deterministic summation order, bit-reproduced by
+  DuckDB's list_dot_product), so each operator here has an exact
+  oracle.
 - ``lsh_ann``: random-hyperplane (sign) LSH — the scale path. Plane
   sign matrices are derived deterministically from md5 so the whole
   pipeline (codes, buckets, re-rank) has an exact ANSI-SQL oracle.
@@ -19,31 +17,18 @@ retrieval. Two paths:
   with a shuffle on the code key; skewed buckets are handled by
   increasing ``n_planes`` (bucket size halves per plane).
 
-- ``pq_train`` / ``pq_encode`` / ``pq_adc_topk``: product quantization
-  (Jégou et al. 2011) — the compressed-vector path. Vectors become
-  ``m`` small integer codes (dim·8 bytes → m ints); search is the
-  asymmetric-distance LUT sum over the codes relation, so a scan at
-  retrieval time never touches a corpus float. The same deterministic
-  Lloyd's machinery trains the per-subspace codebooks.
-
 Scale notes: brute-force is O(N·Q·d) but shuffle-free (broadcast
 join); LSH is one shuffle on (code) + a narrow re-rank. For IVF-style
 partitioning, cluster centroids would play the role of ``code`` —
-same bucket-join shape. PQ is what keeps a 10^10-vector corpus
-memory-resident: codes are ~64× smaller than the float vectors, the
-LUT is broadcast, and the scoring aggregation shuffles only narrow
-(query, vid, decimal) partials with map-side combine.
+same bucket-join shape.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DEFAULT_PLANES = 6
 DIM = 64
@@ -63,28 +48,10 @@ def plane_signs(n_planes: int = DEFAULT_PLANES, dim: int = DIM) -> list:
             for p in range(n_planes)]
 
 
-@F.pandas_udf(T.DoubleType())
-def _dot_vectorized(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched numpy dot — the production fast path (~10-50×
-    the interpreted HOF fold on wide candidate joins). NOT bit-equal
-    to a sequential fold (numpy uses SIMD/pairwise summation), so the
-    oracle-checked queries keep ``use_hof=True``; both paths agree to
-    ≤1e-9 relative (pinned by test_similarity)."""
-    if len(a) == 0:
-        return pd.Series([], dtype=float)
-    av = np.stack(a.to_numpy())
-    bv = np.stack(b.to_numpy())
-    return pd.Series(np.einsum("ij,ij->i", av, bv))
-
-
-def _dot(a, b, use_hof: bool = True):
-    """Dot product of two array<double> columns. ``use_hof=True`` is
-    the sequential fold (deterministic order — matches DuckDB
-    ``list_dot_product`` bit-for-bit: the cross-engine ORACLE mode);
-    ``use_hof=False`` is the Arrow/numpy fast path for production
-    scale (same pattern as dedup's ``use_md5=False``)."""
-    if not use_hof:
-        return _dot_vectorized(a, b)
+def _dot(a, b):
+    """Dot product of two array<double> columns: the sequential fold
+    (deterministic order — matches DuckDB ``list_dot_product``
+    bit-for-bit, so every caller is oracle-checkable)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0.0), lambda acc, x: acc + x)
 
@@ -93,34 +60,30 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding",
-              use_hof: bool = True) -> DataFrame:
+def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     v = _as_double(F.col(vec_col))
     return (df.withColumn("__v", v)
             .withColumn("__norm",
-                        F.sqrt(_dot(F.col("__v"), F.col("__v"),
-                                    use_hof))))
+                        F.sqrt(_dot(F.col("__v"), F.col("__v")))))
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                 id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                use_hof: bool = True) -> DataFrame:
+                vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors of each query over the corpus.
 
     queries is broadcast (small side); sim = dot/(|a|·|b|) with
-    deterministic fold order (``use_hof=False`` swaps in the numpy
-    fast path); ties broken by neighbor id. Returns
+    deterministic fold order; ties broken by neighbor id. Returns
     (query_id, neighbor_id, rank, sim_r4).
     """
-    c = with_norm(corpus, vec_col, use_hof).select(
+    c = with_norm(corpus, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("__v").alias("nv"), F.col("__norm").alias("nn"))
-    q = with_norm(queries, vec_col, use_hof).select(
+    q = with_norm(queries, vec_col).select(
         F.col(id_col).alias("query_id"),
         F.col("__v").alias("qv"), F.col("__norm").alias("qn"))
-    sim = _dot(F.col("qv"), F.col("nv"), use_hof) / (F.col("qn")
-                                                     * F.col("nn"))
+    sim = _dot(F.col("qv"), F.col("nv")) / (F.col("qn")
+                                            * F.col("nn"))
     pairs = (c.join(F.broadcast(q),
                     F.col("neighbor_id") != F.col("query_id"))
              .withColumn("sim", sim))
@@ -258,8 +221,7 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 4,
 def ivf_ann(corpus: DataFrame, query_ids, k: int = 5,
             n_centroids: int = 8, n_probe: int = 2,
             id_col: str = "vec_id", vec_col: str = "embedding",
-            centroids: DataFrame | None = None,
-            use_hof: bool = True) -> DataFrame:
+            centroids: DataFrame | None = None) -> DataFrame:
     """IVF-style ANN: corpus rows are assigned to their nearest centroid
     (inverted lists); each query probes its ``n_probe`` nearest lists
     and re-ranks candidates by exact cosine.
@@ -280,18 +242,18 @@ def ivf_ann(corpus: DataFrame, query_ids, k: int = 5,
         cents = (centroids.select(F.col("cid").alias("centroid_id"),
                                   F.col("c").alias("cv"))
                  .withColumn("cn", F.sqrt(_dot(F.col("cv"),
-                                               F.col("cv"), use_hof))))
+                                               F.col("cv")))))
     else:
         cents = (with_norm(corpus.filter(F.col(id_col) < n_centroids),
-                           vec_col, use_hof)
+                           vec_col)
                  .select(F.col(id_col).alias("centroid_id"),
                          F.col("__v").alias("cv"),
                          F.col("__norm").alias("cn")))
 
     def assign(df: DataFrame, topn: int, out: str) -> DataFrame:
         """nearest-centroid ids by cosine; ties break on centroid_id."""
-        sim = _dot(F.col("__v"), F.col("cv"), use_hof) / (F.col("__norm")
-                                                          * F.col("cn"))
+        sim = _dot(F.col("__v"), F.col("cv")) / (F.col("__norm")
+                                                 * F.col("cn"))
         scored = (df.crossJoin(F.broadcast(cents))
                   .withColumn("__csim", sim))
         if topn == 1:
@@ -316,7 +278,7 @@ def ivf_ann(corpus: DataFrame, query_ids, k: int = 5,
                 .select(F.col(id_col), F.col("__v"), F.col("__norm"),
                         F.col("centroid_id").alias(out)))
 
-    normed = with_norm(corpus, vec_col, use_hof).select(
+    normed = with_norm(corpus, vec_col).select(
         id_col, "__v", "__norm")
     lists = assign(normed, 1, "centroid_id")
     probes = assign(normed.filter(F.col(id_col).isin(list(query_ids))),
@@ -326,8 +288,8 @@ def ivf_ann(corpus: DataFrame, query_ids, k: int = 5,
                       F.col("__v").alias("qv"), F.col("__norm").alias("qn"))
     c = lists.select(F.col(id_col).alias("neighbor_id"), "centroid_id",
                      F.col("__v").alias("nv"), F.col("__norm").alias("nn"))
-    sim = _dot(F.col("qv"), F.col("nv"), use_hof) / (F.col("qn")
-                                                     * F.col("nn"))
+    sim = _dot(F.col("qv"), F.col("nv")) / (F.col("qn")
+                                            * F.col("nn"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id"))
     # each corpus row lives in exactly one inverted list, so a
@@ -341,138 +303,10 @@ def ivf_ann(corpus: DataFrame, query_ids, k: int = 5,
                     F.col("rank").cast("long").alias("rank")))
 
 
-def _pq_slices(df: DataFrame, m: int, id_col: str, vec_col: str,
-               out_id: str = "vid", dim: int = DIM) -> DataFrame:
-    """(id, sub, vs): each vector split into ``m`` contiguous
-    subvectors. Raises if the dimension doesn't divide evenly (PQ's
-    standard precondition)."""
-    if dim % m:
-        raise ValueError(f"pq: dim {dim} not divisible by m {m}")
-    v = _as_double(F.col(vec_col))
-    d_sub = dim // m
-    return df.select(
-        F.col(id_col).alias(out_id),
-        F.posexplode(F.array(*[
-            F.slice(v, i * d_sub + 1, d_sub)
-            for i in range(m)])).alias("sub", "vs"))
-
-
-def pq_train(corpus: DataFrame, m: int = 4, k_codes: int = 16,
-             n_iter: int = 2, id_col: str = "vec_id",
-             vec_col: str = "embedding", dim: int = DIM) -> DataFrame:
-    """Product-quantization codebooks (Jégou et al. 2011): the vector
-    space is split into ``m`` orthogonal subspaces of dim/m and each
-    gets its own ``k_codes``-centroid Lloyd's codebook — the SAME
-    deterministic loop as ``kmeans_centroids`` (sequential-fold
-    distances, DECIMAL component means, first-k init), run per
-    subspace on the sliced corpus. Returns the (sub, cid, c) relation,
-    lazy like ``kmeans_centroids`` so train → encode composes into one
-    job.
-
-    Memory at scale: the codebook is m·k_codes·(dim/m) doubles = one
-    broadcast row set; corpus vectors are read once per subspace."""
-    if dim % m:
-        raise ValueError(f"pq: dim {dim} not divisible by m {m}")
-    d_sub = dim // m
-    parts = []
-    for i in range(m):
-        sub_corpus = corpus.select(
-            F.col(id_col),
-            F.slice(_as_double(F.col(vec_col)), i * d_sub + 1, d_sub)
-            .alias("__sv"))
-        _, _, cents = _lloyd(sub_corpus, k_codes, n_iter, id_col,
-                             "__sv")
-        parts.append(cents.select(F.lit(i).cast("int").alias("sub"),
-                                  "cid", "c"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def pq_encode(corpus: DataFrame, codebooks: DataFrame, m: int = 4,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              exploded: bool = False, dim: int = DIM) -> DataFrame:
-    """PQ encoding: each vector becomes ``m`` small integer code ids —
-    dim·8 bytes down to m ints; the compression that lets a 100 TB
-    embedding corpus keep its searchable form in cluster memory.
-
-    Per subspace, code = argmin-L2 codebook entry (min-struct agg on
-    (d2, cid) — map-side combinable, never a per-vector sort); the
-    codebook is broadcast. ``exploded=True`` returns the narrow
-    (vid, sub, cid) relation (what ``pq_adc_topk`` consumes — skips
-    the reassembly shuffle); default returns (vec_id, codes array)."""
-    cb = (codebooks.select("sub", "cid", "c")
-          .withColumn("c2", _dot(F.col("c"), F.col("c"))))
-    sliced = _pq_slices(corpus, m, id_col, vec_col, dim=dim)
-    d2 = (_dot(F.col("vs"), F.col("vs"))
-          - 2.0 * _dot(F.col("vs"), F.col("c")) + F.col("c2"))
-    assigned = (sliced.join(F.broadcast(cb), "sub")
-                .withColumn("__d2", d2)
-                .groupBy("vid", "sub")
-                .agg(F.min(F.struct(F.col("__d2"),
-                                    F.col("cid"))).alias("__b"))
-                .select("vid", "sub", F.col("__b.cid").alias("cid")))
-    if exploded:
-        return assigned
-    return (assigned.groupBy("vid")
-            .agg(F.array_sort(F.collect_list(
-                F.struct("sub", "cid"))).alias("sc"))
-            .select(F.col("vid").alias(id_col),
-                    F.col("sc.cid").alias("codes")))
-
-
-def pq_adc_topk(corpus: DataFrame, query_ids, k: int = 5, m: int = 4,
-                k_codes: int = 16, n_iter: int = 2,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                codebooks: DataFrame | None = None,
-                dim: int = DIM) -> DataFrame:
-    """PQ asymmetric-distance top-k (ADC): queries stay exact, corpus
-    rows are their integer codes, and distance is the codebook-table
-    sum ``Σ_sub LUT[sub][code]`` where LUT[sub][cid] =
-    ||q_sub − c(sub,cid)||² — the scan never touches a corpus float.
-
-    Plan shape at 10^10 rows: the LUT (queries × codebook, Q·m·k_codes
-    rows) is broadcast; the scored relation is the narrow
-    (vid, sub, cid) codes at m ints/vector; the one aggregation
-    shuffles (query_id, vid) pairs with map-side combine. DECIMAL
-    partial-distance sums make the ranking order-independent, so the
-    operator is deterministic under any partitioning (pinned by
-    test_pq's partition-invariance case). Returns
-    (query_id, neighbor_id, rank, adist_r6)."""
-    if codebooks is None:
-        codebooks = pq_train(corpus, m, k_codes, n_iter, id_col,
-                             vec_col, dim=dim)
-    codes = pq_encode(corpus, codebooks, m, id_col, vec_col,
-                      exploded=True, dim=dim)
-    cb = (codebooks.select("sub", "cid", "c")
-          .withColumn("c2", _dot(F.col("c"), F.col("c"))))
-    q = _pq_slices(corpus.filter(F.col(id_col).isin(list(query_ids))),
-                   m, id_col, vec_col, out_id="query_id", dim=dim)
-    lut = (q.join(F.broadcast(cb), "sub")
-           .select("query_id", "sub", "cid",
-                   (_dot(F.col("vs"), F.col("vs"))
-                    - 2.0 * _dot(F.col("vs"), F.col("c"))
-                    + F.col("c2")).alias("d2p")))
-    scored = (codes.join(F.broadcast(lut), ["sub", "cid"])
-              .filter(F.col("vid") != F.col("query_id"))
-              .groupBy("query_id", "vid")
-              .agg(F.sum(F.col("d2p").cast("decimal(28,12)"))
-                   .cast("double").alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("vid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("vid").alias("neighbor_id"),
-                    F.col("rank").cast("long").alias("rank"),
-                    F.round("adist", 6).alias("adist_r6")))
-
-
 def embedding_neardup_pairs(corpus: DataFrame, tau: float = 0.25,
                             n_planes: int = DEFAULT_PLANES,
                             id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            use_hof: bool = True) -> DataFrame:
+                            vec_col: str = "embedding") -> DataFrame:
     """Embedding-cosine near-dup detection (training-data pipeline op):
     candidate pairs share a sign-LSH bucket (one shuffle on ``code``),
     then exact-cosine verify at ``round(sim, 6) >= tau`` — the rounding
@@ -484,15 +318,15 @@ def embedding_neardup_pairs(corpus: DataFrame, tau: float = 0.25,
     per extra plane (same knob as MinHash LSH band width)."""
     coded = lsh_codes(corpus, n_planes, id_col, vec_col)
     coded = coded.withColumn(
-        "__norm", F.sqrt(_dot(F.col("__v"), F.col("__v"), use_hof)))
+        "__norm", F.sqrt(_dot(F.col("__v"), F.col("__v"))))
     left = coded.select(F.col("vid").alias("a"), "code",
                         F.col("__v").alias("av"),
                         F.col("__norm").alias("an"))
     right = coded.select(F.col("vid").alias("b"), "code",
                          F.col("__v").alias("bv"),
                          F.col("__norm").alias("bn"))
-    sim = _dot(F.col("av"), F.col("bv"), use_hof) / (F.col("an")
-                                                     * F.col("bn"))
+    sim = _dot(F.col("av"), F.col("bv")) / (F.col("an")
+                                            * F.col("bn"))
     return (left.join(right, "code")
             .filter(F.col("a") < F.col("b"))
             .withColumn("sim", sim)
@@ -502,8 +336,7 @@ def embedding_neardup_pairs(corpus: DataFrame, tau: float = 0.25,
 
 def semdedup(corpus: DataFrame, tau: float = 0.7,
              n_centroids: int = 4, n_iter: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             use_hof: bool = True) -> DataFrame:
+             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by k-means clustering then WITHIN-CLUSTER cosine
     pruning — the embedding-space analog of MinHash near-dup, catching
@@ -547,13 +380,13 @@ def semdedup(corpus: DataFrame, tau: float = 0.7,
     # multi-consumer-sketch invariant)
     asg = assign(cents).localCheckpoint(eager=False)
     withn = asg.withColumn(
-        "__n", F.sqrt(_dot(F.col("v"), F.col("v"), use_hof)))
+        "__n", F.sqrt(_dot(F.col("v"), F.col("v"))))
     left = withn.select(F.col("vid").alias("a"), "cid",
                         F.col("v").alias("av"), F.col("__n").alias("an"))
     right = withn.select(F.col("vid").alias("b"), "cid",
                          F.col("v").alias("bv"), F.col("__n").alias("bn"))
-    sim = _dot(F.col("av"), F.col("bv"), use_hof) / (F.col("an")
-                                                     * F.col("bn"))
+    sim = _dot(F.col("av"), F.col("bv")) / (F.col("an")
+                                            * F.col("bn"))
     pairs = (left.join(right, "cid")
              .filter(F.col("a") < F.col("b"))
              .filter(F.round(sim, 6) >= tau)
@@ -573,8 +406,7 @@ def semdedup(corpus: DataFrame, tau: float = 0.7,
 
 def lsh_ann(corpus: DataFrame, query_ids, k: int = 5,
             n_planes: int = DEFAULT_PLANES, id_col: str = "vec_id",
-            vec_col: str = "embedding",
-            use_hof: bool = True) -> DataFrame:
+            vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k: candidates share the query's LSH bucket,
     re-ranked by exact cosine. Returns (query_id, neighbor_id, rank).
 
@@ -583,7 +415,7 @@ def lsh_ann(corpus: DataFrame, query_ids, k: int = 5,
     """
     coded = lsh_codes(corpus, n_planes, id_col, vec_col)
     coded = coded.withColumn(
-        "__norm", F.sqrt(_dot(F.col("__v"), F.col("__v"), use_hof)))
+        "__norm", F.sqrt(_dot(F.col("__v"), F.col("__v"))))
     q = (coded.filter(F.col("vid").isin(list(query_ids)))
          .select(F.col("vid").alias("query_id"),
                  F.col("code"),
@@ -593,8 +425,8 @@ def lsh_ann(corpus: DataFrame, query_ids, k: int = 5,
                          F.col("__norm").alias("nn"))
             .join(F.broadcast(q), "code")
             .filter(F.col("neighbor_id") != F.col("query_id")))
-    sim = _dot(F.col("qv"), F.col("nv"), use_hof) / (F.col("qn")
-                                                     * F.col("nn"))
+    sim = _dot(F.col("qv"), F.col("nv")) / (F.col("qn")
+                                            * F.col("nn"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id"))
     return (cand.withColumn("sim", sim)

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import io
 import xml.etree.ElementTree as ET
-from urllib.parse import urljoin, urlparse
+from urllib.parse import urljoin
 
 import pandas as pd
 from pyspark import StorageLevel
@@ -477,7 +477,3 @@ def _with_crawl_seq(frontier: DataFrame) -> DataFrame:
         (F.col("site_id").cast("long") * F.lit(1 << 40))
         + (F.col("sitemap_ord").cast("long") * F.lit(1 << 24))
         + F.col("url_ord").cast("long"))
-
-
-def host_of(url: str) -> str:
-    return (urlparse(url).hostname or "").lower()

@@ -454,6 +454,13 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
                                   follow_links)
             st.remaining, st.host_state, st.last_full = state[:3]
             st.metrics = load_run_metrics(out_dir)
+            # a batch's row is flushed before its _COMMIT: rows of
+            # batches past the last commit go, as the replay rewrites them
+            kept = [m for m in st.metrics if m["batch"] <= committed[-1]]
+            if len(kept) < len(st.metrics):
+                _replace_file(os.path.join(out_dir, "metrics.jsonl"),
+                              "".join(json.dumps(m) + "\n" for m in kept))
+            st.metrics = kept
             st.flushed = len(st.metrics)  # new rows append after them
             st.batch_id = committed[-1] + 1
             if follow_links:
@@ -948,8 +955,18 @@ def _write_ckpt(root: str, batch_id: int, remaining: DataFrame,
             "host", F.col("sleeptime").alias("__hs_sleeptime")),
         allowMissingColumns=True)
     combined.write.mode("overwrite").parquet(os.path.join(d, "state"))
-    with open(os.path.join(d, "_COMMIT"), "w") as fh:
-        fh.write("full")
+    _replace_file(os.path.join(d, "_COMMIT"), "full")
+
+
+def _replace_file(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` all or nothing: a temp file beside it,
+    then an atomic rename. A crash leaves no file (or the old one) or
+    the whole new one — never an empty ``_COMMIT`` that
+    ``_committed_batches`` would count with no kind in it."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
 
 
 def _ckpt_kind(root: str, batch_id: int) -> str:
@@ -1016,8 +1033,7 @@ def _write_delta_ckpt(root: str, batch_id: int, processed: DataFrame,
                                   F.lit(None).cast("double")),
             allowMissingColumns=True)
     combined.write.mode("overwrite").parquet(os.path.join(d, "state"))
-    with open(os.path.join(d, "_COMMIT"), "w") as fh:
-        fh.write("delta")
+    _replace_file(os.path.join(d, "_COMMIT"), "delta")
 
 
 def _resume_state(spark: SparkSession, root: str, committed: list,

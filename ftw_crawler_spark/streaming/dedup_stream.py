@@ -33,8 +33,8 @@ test_dedup_stream):
 
 Exactly-once: state appends are per-batch subdirectories keyed by the
 streaming batch id (the offset log pins file→batch assignment), so a
-replayed batch overwrites its own state delta instead of doubling it —
-the same idempotence argument as FrontierStream's sink.
+replayed batch overwrites its own state delta instead of doubling it
+(the index sink's ``batch=K`` overwrite makes the same argument).
 
 Compaction: a stream that runs forever accumulates one state subdir
 per micro-batch, so listing + footer overhead grows O(batches). Every
@@ -88,7 +88,7 @@ class DedupStream:
         self.bands = bands
         self.tau = tau
         # 0/None disables compaction (the sibling knobs' convention:
-        # IndexSink.should_compact, run_crawl/FrontierStream); values
+        # IndexSink.should_compact, run_crawl); values
         # below 2 would rewrite O(state) nearly every batch — the
         # exact amplification the fold exists to avoid
         self.compact_every = compact_every or 0

@@ -255,6 +255,60 @@ def test_resume_ignores_uncommitted_checkpoint(spark, world, engine_run,
     assert a == b
 
 
+def test_replayed_batch_writes_one_metrics_row(spark, tiny_world,
+                                               tmp_path_factory):
+    """Crash window of the metrics flush: batch 0's row is on disk but
+    its _COMMIT is not, so a resume replays batch 0. The replay must
+    leave one row for it, not two."""
+    import os
+
+    from ftw_crawler_spark.plans.crawl import load_run_metrics
+
+    out = str(tmp_path_factory.mktemp("metricscrash"))
+    run_crawl(spark, tiny_world, out, crawl_time=CRAWL_TIME,
+              batch_seconds=5.0, max_batches=1)
+    os.remove(os.path.join(out, "checkpoints", "batch=0", "_COMMIT"))
+    run_crawl(spark, tiny_world, out, crawl_time=CRAWL_TIME,
+              batch_seconds=5.0, max_batches=1)
+    assert [m["batch"] for m in load_run_metrics(out)
+            if "admitted" in m] == [0]
+
+
+@pytest.mark.parametrize("kind", ["full", "delta"])
+def test_torn_commit_marker_is_not_committed(spark, tmp_path, monkeypatch,
+                                             kind):
+    """The _COMMIT marker lands whole or not at all: a writer that dies
+    before its rename leaves the batch uncommitted, never an empty
+    marker that would count as committed with no kind."""
+    import os
+
+    from ftw_crawler_spark.plans import crawl
+
+    root = str(tmp_path / "checkpoints")
+    hosts = spark.createDataFrame([("a", 1.0)],
+                                  "host string, sleeptime double")
+    rows = spark.createDataFrame([(1, "http://a/1")],
+                                 "crawl_seq long, loc string")
+
+    def write(batch_id):
+        if kind == "full":
+            crawl._write_ckpt(root, batch_id, rows, hosts)
+        else:
+            crawl._write_delta_ckpt(root, batch_id, rows, hosts)
+
+    def crash(src, dst):
+        raise OSError("killed before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError):
+            write(0)
+    assert crawl._committed_batches(root) == []
+    write(0)
+    assert crawl._committed_batches(root) == [0]
+    assert crawl._ckpt_kind(root, 0) == kind
+
+
 def _uids(result):
     return {r["UID"] for r in result.index().select("UID").collect()}
 

@@ -30,37 +30,17 @@ def test_components_direction_irrelevant(spark):
     assert _cc(spark, [(5, 2), (2, 9)]) == {2: 2, 5: 2, 9: 2}
 
 
-def test_pointer_doubling_same_labels_fewer_rounds(spark):
-    """Adversarial chain graph: min-label propagation needs O(diameter)
-    rounds, pointer doubling (label shortcutting) O(log n) — with
-    identical final labels. Near-dup graphs never need this (they are
-    near-cliques), but a long near-dup *transitive* chain does."""
-    chain = [(i, i + 1) for i in range(16)]
-    pairs = spark.createDataFrame(chain, "a long, b long")
-    s_prop: dict = {}
-    s_pd: dict = {}
-    prop = {r["node"]: r["component"] for r in connected_components(
-        pairs, max_iter=30, algorithm="propagation",
-        stats=s_prop).collect()}
-    pd_ = {r["node"]: r["component"] for r in connected_components(
-        pairs, max_iter=30, algorithm="pointer_doubling",
-        stats=s_pd).collect()}
-    assert prop == pd_ == {i: 0 for i in range(17)}
-    assert s_prop["rounds"] >= 15          # hop-by-hop
-    assert s_pd["rounds"] <= 9             # distance doubles per round
-    assert s_pd["rounds"] < s_prop["rounds"]
-
-
 def test_auto_switches_only_when_diameter_is_real(spark):
-    """auto = propagation on near-clique graphs (zero extra shuffles),
-    pointer doubling once a probe at round >= 4 still sees movement —
-    same labels as both pure modes (monotone steps share the fixpoint)."""
+    """Propagation on near-clique graphs (zero extra shuffles), pointer
+    doubling once a probe at round >= 4 still sees movement — the same
+    component-minimum labels either way (monotone steps share the
+    fixpoint)."""
     clique = spark.createDataFrame(
         [(i, j) for i in range(1, 6) for j in range(i + 1, 6)],
         "a long, b long")
     s_clique: dict = {}
     got = {r["node"]: r["component"] for r in connected_components(
-        clique, algorithm="auto", stats=s_clique).collect()}
+        clique, stats=s_clique).collect()}
     assert got == {i: 1 for i in range(1, 6)}
     assert not s_clique["doubled"]          # never left propagation
 
@@ -68,7 +48,7 @@ def test_auto_switches_only_when_diameter_is_real(spark):
                                   "a long, b long")
     s_auto: dict = {}
     auto = {r["node"]: r["component"] for r in connected_components(
-        chain, max_iter=30, algorithm="auto", stats=s_auto).collect()}
+        chain, max_iter=30, stats=s_auto).collect()}
     assert auto == {i: 0 for i in range(17)}
     assert s_auto["doubled"]                # probe tripped the switch
     assert s_auto["rounds"] <= 12           # beats the 16-round diameter

@@ -263,23 +263,6 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert {r["UID"]: r["lang"] for r in sink.current().collect()} == cur
 
 
-def test_stream_named_generations_are_adopted(spark, tmp_path):
-    """The streaming planner appends under batch=stream_000000NNN
-    (frontier_stream.py): the anchored generation regex must adopt
-    that namespace — current/as_of/changes/history all see it."""
-    sink = IndexSink(spark, str(tmp_path / "index"))
-    sink.append_upserts(spark.createDataFrame(
-        [("u1", "http://a/1", "t1", 5)],
-        "UID string, url string, Title string, op_seq long"),
-        batch_id="stream_000000003")
-    assert {r["UID"] for r in sink.current().collect()} == {"u1"}
-    assert sink.history() == [{"batch_id": 3, "kind": "upserts"}]
-    assert {r["UID"] for r in sink.as_of(3).collect()} == {"u1"}
-    ch = sink.changes(since_batch=2, until_batch=3)
-    assert [(r["UID"], r["_change_type"]) for r in ch.collect()] == \
-        [("u1", "upsert")]
-
-
 def test_snapshot_diff_classification(spark):
     from ftw_crawler_spark.operators.incremental import snapshot_diff
     old = spark.createDataFrame(

@@ -246,22 +246,3 @@ def test_html_to_text_blocks_and_skip_script():
            b"</body></html>")
     assert htmlmod.html_to_text(doc, "text/html") == "T\nH\nA\nB"
 
-
-def test_minhash_xxhash_production_path(spark):
-    """use_md5=False (the JVM-cheap xxhash64 path for real deployments)
-    produces a different hash family but the LSH contract holds:
-    exact-duplicate texts collide in EVERY band and are always
-    candidate pairs."""
-    from ftw_crawler_spark.operators import dedup
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta"),   # dup of 1
-         (3, "one two three four five six seven")],
-        "doc_id long, text string")
-    bands = dedup.minhash_bands(docs, use_md5=False)
-    assert bands.count() == 3 * dedup.DEFAULT_BANDS
-    pairs = {(r["a"], r["b"]) for r in
-             dedup.minhash_candidate_pairs(docs, use_md5=False)
-             .collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
