@@ -425,8 +425,8 @@ class IncrementalUrlFilter:
     """Caller-maintained incremental seen filter: build ONCE over the
     initial url relation, grow with O(batch) deltas, serve in the
     size-appropriate form — all three decisions owned here so callers
-    (plans/crawl.py link discovery and resume) never re-state the
-    geometry/dispatch rules.
+    (plans/crawl.py: the plan-phase seen filter and link discovery)
+    never re-state the geometry/dispatch rules.
 
     Geometry is pinned at construction (``expected_items`` budgets the
     url volume the filter will ever hold — a production run sizes this
