@@ -2966,9 +2966,11 @@ def _multimodal_meta(spark, sf_dir):
       (sample_rate, n_channels, n_samples) and window sampling
       (j < 2 carries audio_window_hash) — same mapInPandas shape.
 
-    The codec is a deterministic md5-derived fake (a real decoder
-    swaps into each stage's per-row body); the distributed path
-    (schemas, Arrow batch shapes, partitioning) is real. The per-doc
+    The codec is the stages' default md5-derived fake (codec="fake");
+    the stdlib codec="real" decoders (functions/imagecodec.py,
+    functions/audiocodec.py) are pinned by test_imagecodec and
+    test_audiocodec instead. The distributed path (schemas, Arrow
+    batch shapes, partitioning) is real. The per-doc
     joins are small-key equi-joins at check scale; production keeps the
     three derivations fused in one mapInPandas pass instead."""
     docs = _t(spark, sf_dir, "documents").select(

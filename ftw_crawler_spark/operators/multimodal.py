@@ -3,11 +3,22 @@
 Images/audio/video ride through the engine as ``binary`` columns with
 a typed metadata struct. The Spark-side plumbing — schema, Arrow batch
 shape, ``mapInPandas`` iterator signature, partitioning — is real and
-tested. The codec is a deterministic md5-derived "decode", exactly
-reproducible in SQL, so the whole distributed path is hash-checked by
-the driver (multimodal_meta_wide). A production deployment swaps a
-real decoder (PIL/libvips/ffmpeg) into the per-row body of each stage;
-the plan shape does not change.
+tested. Every stage has two codec modes:
+
+- ``codec="fake"`` (default, the oracle mode): a deterministic
+  md5-derived "decode" exactly reproducible in SQL, so the whole
+  distributed path is hash-checked by the driver
+  (multimodal_meta_wide).
+- ``codec="real"``: ``functions/imagecodec.py`` — a pure-stdlib
+  decoder for PPM-P6 / 24-bit BMP / 8-bit RGB PNG (zlib, all five
+  filters) with nearest-neighbor resize and pixel-statistics
+  features, so blob → decode → resize → feature runs on REAL bytes
+  (pinned by test_imagecodec) — and ``functions/audiocodec.py`` for
+  the audio stages (PCM s16 WAV decode, zero-order-hold resample,
+  frame windows, sample-statistics features; pinned by
+  test_audiocodec). JPEG/WebP/MP3/video need a library the container
+  lacks — a production deployment swaps PIL/libvips/ffmpeg into the
+  same ``decode_image`` / ``decode_audio`` seams.
 
 Scale notes: ``mapInPandas`` streams Arrow batches — no row-at-a-time
 Python, no driver collect; batch size bounded by
@@ -35,6 +46,14 @@ BLOB_META_SCHEMA = T.StructType([
 ])
 
 
+def decode_image(blob: bytes):
+    """Real codec hook: stdlib decoder for PPM/BMP/PNG
+    (functions/imagecodec.py); raises ValueError on formats that need
+    an external library (PIL/libvips swap into this exact seam)."""
+    from ftw_crawler_spark.functions.imagecodec import decode_image as dec
+    return dec(blob)
+
+
 def _fake_decode(blob: bytes) -> tuple:
     """Deterministic stand-in for decode: md5-derived dimensions.
     Exactly reproducible in SQL from the blob bytes."""
@@ -46,17 +65,27 @@ def _fake_decode(blob: bytes) -> tuple:
 
 
 def blob_meta(df: DataFrame, blob_col: str = "blob",
-              id_col: str = "doc_id") -> DataFrame:
+              id_col: str = "doc_id", codec: str = "fake") -> DataFrame:
     """Decode-stage plumbing over a binary column: one Arrow batch in,
-    one typed-metadata batch out. (id, n_bytes, width, height, magic)."""
+    one typed-metadata batch out. (id, n_bytes, width, height, magic).
+    ``codec="real"`` decodes actual PPM/BMP/PNG bytes (magic = the
+    sniffed format name); the fake default stays SQL-reproducible."""
     src = df.select(F.col(id_col).cast("long").alias("doc_id"),
                     F.col(blob_col).alias("blob"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if codec == "real":
+            from ftw_crawler_spark.functions.imagecodec import (
+                decode_image, sniff)
         for pdf in batches:
             rows = []
             for i, b in zip(pdf["doc_id"], pdf["blob"]):
-                rows.append((int(i), *_fake_decode(bytes(b))))
+                blob = bytes(b)
+                if codec == "real":
+                    w, h, _px = decode_image(blob)
+                    rows.append((int(i), len(blob), w, h, sniff(blob)))
+                else:
+                    rows.append((int(i), *_fake_decode(blob)))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "n_bytes", "width", "height",
                                "magic"])
@@ -73,25 +102,40 @@ RESIZE_SCHEMA = T.StructType([
 
 
 def resize_meta(df: DataFrame, target_w: int = 224, target_h: int = 224,
-                blob_col: str = "blob", id_col: str = "doc_id") -> DataFrame:
+                blob_col: str = "blob", id_col: str = "doc_id",
+                codec: str = "fake") -> DataFrame:
     """Resize-stage plumbing: aspect-preserving fit into
-    (target_w, target_h). Dimensions derive from the blob hash and the
-    pixels are faked as md5(f"{w}x{h}:" + blob), exactly reproducible
-    in SQL (Arrow batches, no shuffle, typed output)."""
+    (target_w, target_h). ``codec="real"`` decodes and ACTUALLY
+    resamples (nearest-neighbor) — resized_hash is the md5 of the
+    resampled RGB bytes; the fake default derives dimensions from the
+    blob hash and fakes the pixels as md5(f"{w}x{h}:" + blob), exactly
+    reproducible in SQL. Same Spark plan either way (Arrow batches, no
+    shuffle, typed output)."""
     src = df.select(F.col(id_col).cast("long").alias("doc_id"),
                     F.col(blob_col).alias("blob"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if codec == "real":
+            from ftw_crawler_spark.functions.imagecodec import (
+                decode_image, resize_nearest)
         for pdf in batches:
             rows = []
             for i, b in zip(pdf["doc_id"], pdf["blob"]):
                 blob = bytes(b)
-                _n, w, h, _m = _fake_decode(blob)
+                if codec == "real":
+                    img = decode_image(blob)
+                    w, h = img[0], img[1]
+                else:
+                    _n, w, h, _m = _fake_decode(blob)
                 scale = min(target_w / w, target_h / h)
                 ow = max(1, int(w * scale))
                 oh = max(1, int(h * scale))
-                digest = hashlib.md5(
-                    f"{ow}x{oh}:".encode() + blob).hexdigest()
+                if codec == "real":
+                    digest = hashlib.md5(
+                        resize_nearest(img, ow, oh)[2]).hexdigest()
+                else:
+                    digest = hashlib.md5(
+                        f"{ow}x{oh}:".encode() + blob).hexdigest()
                 rows.append((int(i), ow, oh, digest))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "out_w", "out_h",
@@ -110,25 +154,34 @@ FEATURE_SCHEMA = T.StructType([
 
 def feature_extract(df: DataFrame, blob_col: str = "blob",
                     id_col: str = "doc_id",
-                    dim: int = FEATURE_DIM) -> DataFrame:
+                    dim: int = FEATURE_DIM,
+                    codec: str = "fake") -> DataFrame:
     """Feature-extraction plumbing: binary column → fixed-dim embedding
     vector (array<double>), Arrow-batched, shuffle-free. The fake
     "model" — component j = md5_long(f"{j}:" + blob) scaled into
     [0, 1) by 2^60 — is exactly reproducible in SQL, so the whole
-    distributed path is oracle-checked. A learned encoder swaps in
-    here (ONNX/torch per executor) with the identical plan shape."""
+    distributed path is oracle-checked; ``codec="real"`` computes
+    pixel statistics of the DECODED image (imagecodec.pixel_features).
+    A learned encoder swaps in here (ONNX/torch per executor) with the
+    identical plan shape."""
     src = df.select(F.col(id_col).cast("long").alias("doc_id"),
                     F.col(blob_col).alias("blob"))
     denom = float(1 << 60)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if codec == "real":
+            from ftw_crawler_spark.functions.imagecodec import (
+                decode_image, pixel_features)
         for pdf in batches:
             rows = []
             for i, b in zip(pdf["doc_id"], pdf["blob"]):
                 blob = bytes(b)
-                vec = [int(hashlib.md5(f"{j}:".encode() + blob)
-                           .hexdigest()[:15], 16) / denom
-                       for j in range(dim)]
+                if codec == "real":
+                    vec = pixel_features(decode_image(blob), dim)
+                else:
+                    vec = [int(hashlib.md5(f"{j}:".encode() + blob)
+                               .hexdigest()[:15], 16) / denom
+                           for j in range(dim)]
                 rows.append((int(i), vec))
             yield pd.DataFrame(rows, columns=["doc_id", "feature"])
 
@@ -157,18 +210,29 @@ def _fake_audio_decode(blob: bytes) -> tuple:
 
 
 def audio_meta(df: DataFrame, blob_col: str = "blob",
-               id_col: str = "doc_id") -> DataFrame:
+               id_col: str = "doc_id", codec: str = "fake") -> DataFrame:
     """Audio decode-stage plumbing over a binary column — the audio
     twin of ``blob_meta``: (id, n_bytes, sample_rate, n_channels,
-    n_samples, magic)."""
+    n_samples, magic). ``codec="real"`` parses actual RIFF/WAV PCM
+    streams (functions/audiocodec.py); the fake default stays
+    SQL-reproducible."""
     src = df.select(F.col(id_col).cast("long").alias("doc_id"),
                     F.col(blob_col).alias("blob"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if codec == "real":
+            from ftw_crawler_spark.functions.audiocodec import (
+                decode_audio, n_frames, sniff_audio)
         for pdf in batches:
             rows = []
             for i, b in zip(pdf["doc_id"], pdf["blob"]):
-                rows.append((int(i), *_fake_audio_decode(bytes(b))))
+                blob = bytes(b)
+                if codec == "real":
+                    audio = decode_audio(blob)
+                    rows.append((int(i), len(blob), audio[0], audio[1],
+                                 n_frames(audio), sniff_audio(blob)))
+                else:
+                    rows.append((int(i), *_fake_audio_decode(blob)))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "n_bytes", "sample_rate",
                                "n_channels", "n_samples", "magic"])
@@ -184,25 +248,69 @@ AUDIO_WINDOW_SCHEMA = T.StructType([
 
 
 def audio_windows(df: DataFrame, n_windows: int = 2,
-                  blob_col: str = "blob", id_col: str = "doc_id") -> DataFrame:
+                  blob_col: str = "blob", id_col: str = "doc_id",
+                  codec: str = "fake") -> DataFrame:
     """Audio window sampling (1 row in → n_windows rows out) — the
-    audio twin of ``frame_sample``: window k's "content" is
+    audio twin of ``frame_sample``. ``codec="real"`` hashes the
+    decoded stream's contiguous near-equal frame windows
+    (audiocodec.window_slices); the fake default hashes
     md5(f"w{k}:" + blob), exactly reproducible in SQL."""
     src = df.select(F.col(id_col).cast("long").alias("doc_id"),
                     F.col(blob_col).alias("blob"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if codec == "real":
+            from ftw_crawler_spark.functions.audiocodec import (
+                decode_audio, window_slices)
         for pdf in batches:
             out = []
             for i, b in zip(pdf["doc_id"], pdf["blob"]):
                 blob = bytes(b)
-                for k in range(n_windows):
-                    out.append((int(i), k, hashlib.md5(
-                        f"w{k}:".encode() + blob).hexdigest()))
+                if codec == "real":
+                    wins = window_slices(decode_audio(blob), n_windows)
+                    for k, pcm in enumerate(wins):
+                        out.append((int(i), k,
+                                    hashlib.md5(pcm).hexdigest()))
+                else:
+                    for k in range(n_windows):
+                        out.append((int(i), k, hashlib.md5(
+                            f"w{k}:".encode() + blob).hexdigest()))
             yield pd.DataFrame(
                 out, columns=["doc_id", "window_idx", "window_hash"])
 
     return src.mapInPandas(run, schema=AUDIO_WINDOW_SCHEMA)
+
+
+def audio_feature_extract(df: DataFrame, blob_col: str = "blob",
+                          id_col: str = "doc_id", dim: int = FEATURE_DIM,
+                          codec: str = "fake") -> DataFrame:
+    """Audio feature plumbing: binary → fixed-dim array<double>, same
+    Arrow-batched shuffle-free plan as ``feature_extract``. The fake
+    "model" — component j = md5_long(f"a{j}:" + blob) / 2^60 — is
+    SQL-reproducible; ``codec="real"`` computes sample statistics of
+    the DECODED stream (audiocodec.audio_features)."""
+    src = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                    F.col(blob_col).alias("blob"))
+    denom = float(1 << 60)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if codec == "real":
+            from ftw_crawler_spark.functions.audiocodec import (
+                audio_features, decode_audio)
+        for pdf in batches:
+            rows = []
+            for i, b in zip(pdf["doc_id"], pdf["blob"]):
+                blob = bytes(b)
+                if codec == "real":
+                    vec = audio_features(decode_audio(blob), dim)
+                else:
+                    vec = [int(hashlib.md5(f"a{j}:".encode() + blob)
+                               .hexdigest()[:15], 16) / denom
+                           for j in range(dim)]
+                rows.append((int(i), vec))
+            yield pd.DataFrame(rows, columns=["doc_id", "feature"])
+
+    return src.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType([

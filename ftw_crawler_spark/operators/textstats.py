@@ -228,6 +228,50 @@ def hll_distinct(df: DataFrame, col: str, group_cols: tuple = (),
     return per_group.select(*gcols, est.alias("est"))
 
 
+CM_DEPTH = 4
+
+
+def cm_sketch(df: DataFrame, col: str, width: int = 1024,
+              depth: int = CM_DEPTH) -> DataFrame:
+    """(r, b, cnt): count-min sketch of a column's value frequencies
+    (Cormode & Muthukrishnan 2005) — depth×width integer counters,
+    row r's bucket = md5_long(f"{r}:" + value) mod width. Pure
+    integer arithmetic end to end (deterministic in every engine —
+    no floats anywhere), built with ONE map-side-combined shuffle
+    that collapses any corpus to ≤ depth·width rows. The sketch
+    relation is broadcastable state: heavy-hitter probes, hot-host
+    detection, join-frequency planning."""
+    from ftw_crawler_spark.operators.dedup import md5_long
+    rows = F.explode(F.array(*[F.lit(r) for r in range(depth)]))
+    v = F.col(col).cast("string")
+    return (df.select(v.alias("__v"), rows.alias("r"))
+            .select("r", F.pmod(md5_long(
+                F.concat(F.col("r").cast("string"), F.lit(":"),
+                         F.col("__v"))), F.lit(width)).alias("b"))
+            .groupBy("r", "b").agg(F.count(F.lit(1)).alias("cnt")))
+
+
+def cm_estimate(sketch: DataFrame, probes: DataFrame, col: str,
+                width: int = 1024, depth: int = CM_DEPTH) -> DataFrame:
+    """(value, est): point-frequency estimates from a count-min
+    sketch — est = min over rows of the value's counter, an upper
+    bound that equals the true count when no collision landed in any
+    of the value's ``depth`` buckets. The probe side re-derives its
+    (r, b) keys and joins the broadcast sketch; missing counters read
+    as 0."""
+    from ftw_crawler_spark.operators.dedup import md5_long
+    rows = F.explode(F.array(*[F.lit(r) for r in range(depth)]))
+    v = F.col(col).cast("string")
+    keyed = (probes.select(v.alias("value"), rows.alias("r"))
+             .select("value", "r", F.pmod(md5_long(
+                 F.concat(F.col("r").cast("string"), F.lit(":"),
+                          F.col("value"))), F.lit(width)).alias("b")))
+    return (keyed.join(F.broadcast(sketch), ["r", "b"], "left")
+            .groupBy("value")
+            .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0)))
+                 .cast("long").alias("est")))
+
+
 def exact_percentiles(df: DataFrame, value_col: str,
                       ps: tuple = (25, 50, 75, 90, 99)) -> DataFrame:
     """(p, value): EXACT nearest-rank percentiles of an integer column

@@ -272,6 +272,40 @@ def test_hll_grouped_and_duplicate_insensitive(spark):
     assert got3 == got
 
 
+def _py_cm(values, probes, width=64, depth=4):
+    import hashlib
+
+    def h(r, v):
+        return int(hashlib.md5(f"{r}:{v}".encode())
+                   .hexdigest()[:15], 16) % width
+    table = {}
+    for v in values:
+        for r in range(depth):
+            k = (r, h(r, v))
+            table[k] = table.get(k, 0) + 1
+    return {p: min(table.get((r, h(r, p)), 0) for r in range(depth))
+            for p in probes}
+
+
+def test_cm_sketch_estimates_match_python(spark):
+    from collections import Counter
+    vals = [f"tok{i % 9}" for i in range(300)] + ["hot"] * 120
+    probes = ["tok0", "tok8", "hot", "absent"]
+    df = spark.createDataFrame([(v,) for v in vals], "v string")
+    pdf = spark.createDataFrame([(p,) for p in probes], "v string")
+    sk = ts.cm_sketch(df, "v", width=64, depth=4)
+    got = {r["value"]: r["est"] for r in
+           ts.cm_estimate(sk, pdf, "v", width=64, depth=4).collect()}
+    assert got == _py_cm(vals, probes, width=64, depth=4)
+    # upper-bound property vs truth; absent value reads 0 or collision
+    truth = Counter(vals)
+    for p in probes:
+        assert got[p] >= truth[p]
+    assert got["hot"] == 120   # width 64 >> 10 distinct: no collision
+    # the sketch is bounded: never more rows than depth*width
+    assert sk.count() <= 4 * 64
+
+
 def test_ppl_buckets_exact_terciles(spark):
     """CCNet head/middle/tail terciles: exact nearest-rank cuts
     (3·cum ≥ k·total over the ppm-integer view), ties share a
