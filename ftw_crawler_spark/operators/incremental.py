@@ -74,9 +74,8 @@ def purge_candidates(index: DataFrame, sites: DataFrame,
         "left_anti")
 
 
-def with_last_indexed(frontier: DataFrame, index: DataFrame,
-                      sites: DataFrame) -> DataFrame:
-    """F3: ``last_indexed`` via exact url equality — against the
+def last_indexed_relation(index: DataFrame, sites: DataFrame) -> DataFrame:
+    """(site_id, loc, last_indexed): the F3 lookup table — the
     SITE-SCOPED index scan only (the reference looks the url up in the
     per-site ``indexed_docs`` list, main.py:61-66 + 49-58; a doc outside
     the site's scope — e.g. a case-variant url that escapes the
@@ -85,9 +84,16 @@ def with_last_indexed(frontier: DataFrame, index: DataFrame,
     last = scoped.select("site_id", F.col("url").alias("loc"),
                          F.col("modified").alias("last_indexed"))
     # several index generations per url pre-compaction — keep max
-    last = last.groupBy("site_id", "loc").agg(
+    return last.groupBy("site_id", "loc").agg(
         F.max("last_indexed").alias("last_indexed"))
-    return frontier.join(last, ["site_id", "loc"], "left")
+
+
+def with_last_indexed(frontier: DataFrame, index: DataFrame,
+                      sites: DataFrame) -> DataFrame:
+    """F3: ``last_indexed`` via exact url equality against
+    ``last_indexed_relation``."""
+    return frontier.join(last_indexed_relation(index, sites),
+                         ["site_id", "loc"], "left")
 
 
 def is_modified_col(force: bool = False):

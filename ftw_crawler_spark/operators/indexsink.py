@@ -52,6 +52,8 @@ class IndexSink:
         self.base_path = os.path.join(root, "base")
         self.delta_root = os.path.join(root, "delta")
         self.read_only = read_only
+        # (generation key, view) of the last ``current()``
+        self._current = None
         if not read_only:
             self._recover_compaction()
 
@@ -174,13 +176,36 @@ class IndexSink:
         return (log.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1).drop("__rn"))
 
+    def _generation_key(self) -> tuple:
+        """The committed generation set: (path, _SUCCESS mtime_ns,
+        _SUCCESS inode) of the base and of every committed delta dir.
+        Any append, compaction or in-place rewrite of a generation
+        (a crash replay overwrites its batch dir) writes a new
+        ``_SUCCESS`` and so changes the key. Pure metadata."""
+        key = []
+        for p in [self.base_path] + [p for _, _, p in self._delta_dirs()]:
+            try:
+                st = os.stat(os.path.join(p, "_SUCCESS"))
+            except FileNotFoundError:
+                continue
+            key.append((p, st.st_mtime_ns, st.st_ino))
+        return tuple(key)
+
     def current(self) -> DataFrame | None:
-        """The MERGE-resolved view: last op per UID, tombstones dropped."""
+        """The MERGE-resolved view: last op per UID, tombstones dropped.
+        Memoized per committed generation set (one entry): while the
+        sink is unchanged every call returns the same DataFrame, so a
+        repeated read neither re-lists the parquet dirs nor re-infers
+        their schemas, and re-runs an already analyzed plan."""
+        key = self._generation_key()
+        if self._current is not None and self._current[0] == key:
+            return self._current[1]
         log = self._read_log()
-        if log is None:
-            return None
-        return (self._resolve_lww(log)
+        view = (None if log is None else
+                self._resolve_lww(log)
                 .filter(~F.col("is_delete")).drop("is_delete"))
+        self._current = (key, view)
+        return view
 
     def as_of(self, batch_id: int) -> DataFrame | None:
         """Time travel (Iceberg ``VERSION AS OF`` analog): the

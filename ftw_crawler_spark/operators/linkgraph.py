@@ -170,7 +170,14 @@ def candidates_from_links(links: DataFrame, known: DataFrame,
     filter MUST contain every known url (no-false-negative contract —
     a miss would re-enqueue a seen url); the exact anti-join backstop
     below keeps results bit-identical either way, even if the filter
-    oversaturates past its sizing."""
+    oversaturates past its sizing.
+
+    An ``IncrementalUrlFilter`` gates the anti-join instead of
+    splitting the plan: ``LEFT ANTI JOIN known ON loc = url AND
+    __maybe_seen`` — the candidates (outlink explode, canonicalization,
+    probe) are planned and run once. The candidate side is batch-sized
+    and the known side is read whole either way, so a split would save
+    no shuffle here."""
     cand = (links
             .select(canonical_url_col(F.col("dst_url")).alias("loc"))
             .groupBy("loc").agg(F.count(F.lit(1)).alias("n_refs")))
@@ -194,11 +201,15 @@ def candidates_from_links(links: DataFrame, known: DataFrame,
     # re-shuffle the O(frontier) known set on every per-batch call
     known_urls = known.select(
         canonical_url_col(F.col(known_url_col)).alias("url"))
+    if isinstance(known_bloom, seen.IncrementalUrlFilter):
+        marked = known_bloom.mark(cand, "loc")
+        return (marked.join(known_urls,
+                            (F.col("loc") == F.col("url"))
+                            & F.col("__maybe_seen"), "left_anti")
+                .drop("__maybe_seen"))
     if known_bloom is None:
         new, maybe = seen.split_by_index(cand, known_urls, "loc", "url",
                                          expected_items=expected_known)
-    elif isinstance(known_bloom, seen.IncrementalUrlFilter):
-        new, maybe = known_bloom.split(cand, "loc")
     elif isinstance(known_bloom, (bytes, bytearray)):
         new, maybe = seen.split_by_bloom(cand, bytes(known_bloom),
                                          "loc")

@@ -290,11 +290,19 @@ def merge_blooms(a: bytes | None, b: bytes | None) -> bytes | None:
     return a[:hdr] + merged.tobytes()
 
 
-def might_contain_col(bloom_bytes: bytes, url_col: str = "loc"):
+def might_contain_col(bloom_bytes: bytes, url_col: str = "loc",
+                      opaque: bool = False):
     """Vectorized shard-routed membership probe over the broadcast
     filter bytes (the small-filter serving mode — the whole array
     ships to each worker; use the sharded mode above
-    BROADCAST_MAX_BYTES)."""
+    BROADCAST_MAX_BYTES).
+
+    ``opaque`` marks the UDF nondeterministic so the optimizer treats
+    the probe's result as a value, not a formula: a deterministic probe
+    referenced in a join condition is substituted through the join's
+    key equality (constraint inference) and re-evaluated as an inferred
+    filter over the OTHER side — a Python pass over the whole known
+    set."""
     n_bits, k, n_shards = bloom_shape(bloom_bytes)
     bits = np.frombuffer(bloom_bytes[4 + _HEADER.size:], dtype=np.uint8)
 
@@ -308,6 +316,8 @@ def might_contain_col(bloom_bytes: bytes, url_col: str = "loc"):
         hit = (bits[g >> 3] >> (g & 7).astype(np.uint8)) & 1
         return pd.Series(hit.all(axis=1))
 
+    if opaque:
+        probe = probe.asNondeterministic()
     return probe(*_hash_cols(url_col, n_shards))
 
 
@@ -542,6 +552,23 @@ class IncrementalUrlFilter:
             # (and if an executor ever lost a successor block, lineage
             # bottoms out at the last checkpoint, staying correct)
             old.unpersist(blocking=False)
+
+    def mark(self, df: DataFrame, url_col: str = "loc") -> DataFrame:
+        """``df`` plus a boolean ``__maybe_seen`` (False ⇒ surely
+        unseen) against the current state, in either serving form. For
+        callers that gate ONE exact join on the column (a join
+        condition ``AND __maybe_seen``) instead of forking the plan
+        into ``split``'s two branches: the probe runs once, and no
+        branch re-plans the input."""
+        if not self._broadcastable:
+            return _mark_sharded(df, self._rel, self.shape, url_col)
+        if self._bytes is None:
+            # empty filter: same posture as split_by_bloom — all
+            # candidates, the exact join decides
+            return df.withColumn("__maybe_seen", F.lit(True))
+        return df.withColumn(
+            "__maybe_seen",
+            might_contain_col(self._bytes, url_col, opaque=True))
 
     def split(self, frontier: DataFrame, url_col: str = "loc"):
         """(definitely_new, candidates) against the current state."""

@@ -71,7 +71,8 @@ from ftw_crawler_spark.functions.urls import canonical_url_col
 from ftw_crawler_spark.operators import linkgraph, politeness, robots, seen
 from ftw_crawler_spark.operators.extraction import extract_documents
 from ftw_crawler_spark.operators.incremental import (
-    is_modified_col, purge_candidates, with_last_indexed)
+    is_modified_col, last_indexed_relation, purge_candidates,
+    with_last_indexed)
 from ftw_crawler_spark.operators.indexsink import IndexSink
 from ftw_crawler_spark.operators.sitemaps import build_frontier
 from ftw_crawler_spark.sources.synth import default_sites
@@ -158,13 +159,18 @@ class CrawlState:
     # the discover step, present when links are followed: the enqueued
     # set (every loc ever put on the frontier), its incremental filter,
     # the lazy segments unioned onto it since its last compaction, and
-    # what annotating discovered rows needs
+    # what annotating discovered rows needs — the per-run dimensions
+    # (index0 seen filter, index0 last-indexed relation, robots rules)
+    # are built once, in the first discover unit, unless the plan step
+    # handed the filter over
     enqueued: DataFrame | None = None
     enq_filter: seen.IncrementalUrlFilter | None = None
     enq_segments: int = 0
     host_dim: DataFrame | None = None
     index0_filter: seen.IncrementalUrlFilter | None = None
     index0_rows: int = 0
+    last0: DataFrame | None = None
+    robots_rules: DataFrame | None = None
 
     @property
     def ckpt_root(self) -> str:
@@ -209,28 +215,20 @@ def _load_world(spark: SparkSession, world_dir: str,
     return world
 
 
-def _annotate_frontier(frontier: DataFrame, world: dict,
-                       index_current: DataFrame | None,
-                       sites_dim: DataFrame, force: bool,
-                       expected_indexed: int | None = None,
-                       index_filter: "seen.IncrementalUrlFilter | None"
-                       = None,
-                       not_due: DataFrame | None = None) -> DataFrame:
-    """Steps F3/F4/F7/F8 as one narrow-column pass; html untouched.
+def _robots_rules(world: dict) -> DataFrame | None:
+    """Per-host parsed robots rules, or None for a world without a
+    robots table (every url allowed)."""
+    if world.get("robots") is None:
+        return None
+    return robots.robots_rules(world["robots"])
 
-    ``expected_indexed`` sizes the seen bloom filter without a count
-    job (run_crawl reads it from the index base's parquet footers).
-    ``index_filter``: a prebuilt seen filter over ``index_current``'s
-    urls — callers that annotate repeatedly against the same immutable
-    index snapshot (link discovery, every batch) or that can overlap
-    the build with other plan-phase jobs pass one instead of paying a
-    fresh O(index) filter build per call. The filter is a PRE-filter
-    over the same url set, so results are bit-identical either way.
-    ``not_due``: optional (loc) relation of urls the adaptive recrawl
-    scheduler says are not yet due — they skip with 'not_due' BEFORE
-    any fetch-dependent gate (the whole point: a not-due url costs no
-    page-store touch). None (the default) adds no join and no column —
-    plan bit-identical to the ungated path."""
+
+def _fetch_gates(frontier: DataFrame, world: dict,
+                 rules: DataFrame | None,
+                 not_due: DataFrame | None) -> DataFrame:
+    """The F7/F8 inputs and the robots gate as narrow-column joins
+    (html untouched): page-store ``warc_ts``, fetch status, the recrawl
+    gate's ``__not_due`` mark and ``robots_allowed``."""
     pages_meta = world["pages"].select(F.col("url").alias("loc"),
                                        "warc_ts")
     fs = world["fetch_status"].select(
@@ -250,30 +248,14 @@ def _annotate_frontier(frontier: DataFrame, world: dict,
     # robots gate (north rule): broadcast per-host rules, pure-column
     # longest-prefix evaluation; checked BEFORE any fetch-dependent
     # logic (a compliant crawler never fetches a disallowed path)
-    if world.get("robots") is not None:
-        rules = robots.robots_rules(world["robots"])
-        df = robots.apply_robots(df, rules, "loc")
-    else:
-        df = df.withColumn("robots_allowed", F.lit(True))
+    if rules is not None:
+        return robots.apply_robots(df, rules, "loc")
+    return df.withColumn("robots_allowed", F.lit(True))
 
-    if index_current is not None:
-        # bloom prune: urls surely not indexed skip the exact join.
-        # The serving form is picked by filter size — driver-bytes
-        # broadcast here (small index), the end-to-end (shard, bits)
-        # relation above BROADCAST_MAX_BYTES
-        if index_filter is not None:
-            new, cand = index_filter.split(df, "loc")
-        else:
-            new, cand = seen.split_by_index(
-                df, index_current.select("url"), "loc", "url",
-                expected_items=expected_indexed)
-        cand = with_last_indexed(cand, index_current, sites_dim)
-        new = new.withColumn("last_indexed",
-                             F.lit(None).cast("timestamp"))
-        df = new.unionByName(cand)
-    else:
-        df = df.withColumn("last_indexed", F.lit(None).cast("timestamp"))
 
+def _classify(df: DataFrame, force: bool,
+              not_due: DataFrame | None) -> DataFrame:
+    """``skip_reason`` over the gate columns and ``last_indexed``."""
     modified = is_modified_col(force)
     page_found = F.col("warc_ts").isNotNull()
     skip = F.when(~F.col("robots_allowed"),
@@ -291,10 +273,56 @@ def _annotate_frontier(frontier: DataFrame, world: dict,
     return df.withColumn("skip_reason", skip).drop("__not_due")
 
 
+def _annotate_frontier(frontier: DataFrame, world: dict,
+                       index_current: DataFrame | None,
+                       sites_dim: DataFrame, force: bool,
+                       expected_indexed: int | None = None,
+                       index_filter: "seen.IncrementalUrlFilter | None"
+                       = None,
+                       not_due: DataFrame | None = None) -> DataFrame:
+    """Steps F3/F4/F7/F8 over the sitemap frontier as one
+    narrow-column pass; html untouched.
+
+    ``expected_indexed`` sizes the seen bloom filter without a count
+    job (run_crawl reads it from the index base's parquet footers).
+    ``index_filter``: a prebuilt seen filter over ``index_current``'s
+    urls — a caller that can overlap the build with other plan-phase
+    jobs passes one instead of paying the O(index) build inline. The
+    filter is a PRE-filter over the same url set, so results are
+    bit-identical either way. The frontier is O(frontier) rows, so
+    here the filter SPLITS it: surely-new rows skip the last-indexed
+    shuffle entirely (at the 10^10 design point that skip is an
+    O(frontier) shuffle saved).
+    ``not_due``: optional (loc) relation of urls the adaptive recrawl
+    scheduler says are not yet due — they skip with 'not_due' BEFORE
+    any fetch-dependent gate (the whole point: a not-due url costs no
+    page-store touch). None (the default) adds no join and no column —
+    plan bit-identical to the ungated path."""
+    df = _fetch_gates(frontier, world, _robots_rules(world), not_due)
+    if index_current is not None:
+        # bloom prune: urls surely not indexed skip the exact join.
+        # The serving form is picked by filter size — driver-bytes
+        # broadcast here (small index), the end-to-end (shard, bits)
+        # relation above BROADCAST_MAX_BYTES
+        if index_filter is not None:
+            new, cand = index_filter.split(df, "loc")
+        else:
+            new, cand = seen.split_by_index(
+                df, index_current.select("url"), "loc", "url",
+                expected_items=expected_indexed)
+        cand = with_last_indexed(cand, index_current, sites_dim)
+        new = new.withColumn("last_indexed",
+                             F.lit(None).cast("timestamp"))
+        df = new.unionByName(cand)
+    else:
+        df = df.withColumn("last_indexed", F.lit(None).cast("timestamp"))
+    return _classify(df, force, not_due)
+
+
 def _annotate_discovered(cand: DataFrame, world: dict,
-                         sites_dim: DataFrame, host_dim: DataFrame,
-                         force: bool,
+                         host_dim: DataFrame, force: bool,
                          index_filter: "seen.IncrementalUrlFilter",
+                         last0: DataFrame, rules: DataFrame | None,
                          not_due: DataFrame | None = None) -> DataFrame:
     """Link-discovered candidates (loc, n_refs) → annotated frontier
     rows, shaped exactly like sitemap rows so they union into
@@ -309,10 +337,16 @@ def _annotate_discovered(cand: DataFrame, world: dict,
       function of the url (deterministic, resume-stable), disjoint from
       the sitemap ordinal space; same-batch hash collisions resolve to
       a deterministic min-loc winner;
-    - the same ``_annotate_frontier`` pass as sitemap rows (robots,
-      last-indexed against the PRE-RUN index, fetch status, skip
-      classification).
-    """
+    - the same gates and skip classification as sitemap rows (robots,
+      fetch status, last-indexed against the PRE-RUN index), over the
+      per-run dimensions ``rules`` and ``last0`` (the index0
+      ``last_indexed_relation``), built once and shared by every
+      discovering batch.
+
+    One linear plan: the batch-sized rows are marked by ``index_filter``
+    and LEFT JOINed to ``last0`` ON (site_id, loc) AND __maybe_seen —
+    identical to a split + union (the filter has no false negatives),
+    without planning the rows twice."""
     host = F.lower(F.parse_url(F.col("loc"), F.lit("HOST")))
     cand = (cand.withColumn("host", host)
             .join(F.broadcast(host_dim), "host")
@@ -342,10 +376,15 @@ def _annotate_discovered(cand: DataFrame, world: dict,
         F.col("n_refs").cast("string").alias("priority"),
         F.lit(None).cast("string").alias("target"),
         "host", "crawl_seq")
-    return _annotate_frontier(frontier, world, world["index0"],
-                              sites_dim, force,
-                              index_filter=index_filter,
-                              not_due=not_due)
+    df = index_filter.mark(_fetch_gates(frontier, world, rules, not_due),
+                           "loc")
+    last = last0.select(F.col("site_id").alias("__l_site"),
+                        F.col("loc").alias("__l_loc"), "last_indexed")
+    df = (df.join(last, (F.col("site_id") == F.col("__l_site"))
+                  & (F.col("loc") == F.col("__l_loc"))
+                  & F.col("__maybe_seen"), "left")
+          .drop("__l_site", "__l_loc", "__maybe_seen"))
+    return _classify(df, force, not_due)
 
 
 def _batch_resources(batch: DataFrame, world: dict,
@@ -807,8 +846,9 @@ def _extract_sink(st: CrawlState, batch: DataFrame,
 def _discover_schedule(st: CrawlState, docs: DataFrame):
     """Discover step, then the next schedule — one prefetch unit, so the
     schedule stays a pure function of the post-discovery frontier
-    (resume replays it exactly). The batch's outlinks are split against
-    the enqueued set, annotated like sitemap rows, admitted (counted and
+    (resume replays it exactly). The batch's outlinks are anti-joined
+    against the enqueued set, annotated like sitemap rows — one linear
+    plan over the per-run dimensions — admitted (counted and
     added to the enqueued filter in one job where the filter's form
     allows) and unioned into ``remaining``."""
     links = docs.select(F.col("url").alias("src_url"),
@@ -823,11 +863,22 @@ def _discover_schedule(st: CrawlState, docs: DataFrame):
         st.index0_filter = seen.IncrementalUrlFilter(
             st.world["index0"].select("url"), "url",
             expected_items=st.index0_rows)
+    if st.last0 is None:
+        # the other per-run dimensions, lazily checkpointed: the first
+        # annotation job below materializes them, every later batch's
+        # plan points at their blocks instead of re-planning the index0
+        # scan + aggregate and the robots parse UDF
+        st.last0 = last_indexed_relation(
+            st.world["index0"], st.sdf).localCheckpoint(eager=False)
+        rules = _robots_rules(st.world)
+        st.robots_rules = (rules.localCheckpoint(eager=False)
+                           if rules is not None else None)
     # lazy checkpoint: the admission job below materializes it, so
     # plan-run + checkpoint + counts are ONE job
     ann = _annotate_discovered(
-        cand, st.world, st.sdf, st.host_dim, st.force,
-        index_filter=st.index0_filter,
+        cand, st.world, st.host_dim, st.force,
+        index_filter=st.index0_filter, last0=st.last0,
+        rules=st.robots_rules,
         not_due=st.not_due).localCheckpoint(eager=False)
     n_new, n_disc = st.enq_filter.admit(
         ann.withColumn("__curl", canonical_url_col(F.col("loc"))),

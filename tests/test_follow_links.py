@@ -29,12 +29,49 @@ def linked_world(spark, tmp_path_factory):
     return d
 
 
+def _plan_nodes(df) -> list:
+    """(depth, node name, node text) for every node of ``df``'s
+    optimized logical plan, depth-first, so a node's subtree is the run
+    of deeper nodes right after it. A cached relation is a leaf there:
+    the persisted docs' own plan (extraction and its UDFs) is not
+    walked."""
+    out, todo = [], [(0, df._jdf.queryExecution().optimizedPlan())]
+    while todo:
+        depth, node = todo.pop()
+        out.append((depth, node.nodeName(), node.simpleString(100)))
+        kids = node.children()
+        todo.extend((depth + 1, kids.apply(i))
+                    for i in range(kids.size()))
+    return out
+
+
 @pytest.fixture(scope="module")
-def follow_run(spark, linked_world, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("followout"))
-    return run_crawl(spark, linked_world, out, crawl_time=CRAWL_TIME,
-                     batch_seconds=1.0, order_mode="priority",
-                     follow_links=True)
+def follow_traced(spark, linked_world, tmp_path_factory):
+    """The follow-links crawl, plus the plan of every discovered-row
+    annotation it built, taken while that batch's docs are cached."""
+    from ftw_crawler_spark.plans import crawl
+    plans = []
+    orig = crawl._annotate_discovered
+
+    def capture(*args, **kwargs):
+        ann = orig(*args, **kwargs)
+        plans.append(_plan_nodes(ann))
+        return ann
+
+    crawl._annotate_discovered = capture
+    try:
+        out = str(tmp_path_factory.mktemp("followout"))
+        result = run_crawl(spark, linked_world, out,
+                           crawl_time=CRAWL_TIME, batch_seconds=1.0,
+                           order_mode="priority", follow_links=True)
+    finally:
+        crawl._annotate_discovered = orig
+    return result, plans
+
+
+@pytest.fixture(scope="module")
+def follow_run(follow_traced):
+    return follow_traced[0]
 
 
 def _index_rows(result):
@@ -92,6 +129,34 @@ def test_nrefs_priority_order(follow_run):
         last = by_url.get(f"{s.url}hidden/h-{N_HIDDEN - 1}.html")
         assert first is not None and last is not None
         assert first <= last
+
+
+def test_discovery_annotation_is_one_linear_plan(follow_traced):
+    """Outside the cached docs relation, each discovery annotation plan
+    evaluates exactly two Python probes (the enqueued-set and index0
+    seen filters), never the robots parse UDF (the rules are a per-run
+    dimension), and forks on no seen split: the only Union allowed is
+    the enqueued set's lazy union of checkpointed segments (under the
+    projections and inferred not-null filters of the anti-join's known
+    side)."""
+    _, plans = follow_traced
+    assert len(plans) >= 2
+    for nodes in plans:
+        python = [text for _, name, text in nodes
+                  if "Python" in name or "Pandas" in name]
+        assert len(python) == 2 and all("probe" in t for t in python), \
+            python
+        assert not [t for _, _, t in nodes if "parse_robots_udf" in t]
+        for i, (depth, name, _) in enumerate(nodes):
+            if name != "Union":
+                continue
+            below = []
+            for d, n, _ in nodes[i + 1:]:
+                if d <= depth:
+                    break
+                below.append(n)
+            assert set(below) <= {"Project", "Filter", "LogicalRDD"}, \
+                below
 
 
 def test_follow_links_resume_safe(spark, linked_world, follow_run,

@@ -33,6 +33,43 @@ def test_merge_resolution(spark, tmp_path):
     assert rows == {"u1": "new-1", "u3": "old-3", "u4": "new-4"}
 
 
+def test_current_memoized_per_generation_set(spark, tmp_path):
+    """``current()`` hands back the same view while the committed
+    generation set is unchanged, and a new one after every write that
+    changes it — including an in-place rewrite of a batch dir (a crash
+    replay), whose rewritten rows must be what the new view reads."""
+    sink = _sink(spark, tmp_path)
+    schema = "UID string, url string, Title string, op_seq long"
+
+    def titles(view):
+        return {r["UID"]: r["Title"] for r in view.collect()}
+
+    views = [sink.current()]
+    assert sink.current() is views[-1]
+    for write in (
+            lambda: sink.append_upserts(spark.createDataFrame(
+                [("u3", "http://a/3", "new-3", 12)], schema), batch_id=2),
+            lambda: sink.append_deletes(
+                spark.createDataFrame([("u4",)], "UID string"),
+                batch_id=3),
+            sink.compact,
+            lambda: sink.append_upserts(spark.createDataFrame(
+                [("u1", "http://a/1", "replay-a", 30)], schema),
+                batch_id=4),
+            # the same batch dir written again, as a replay would
+            lambda: sink.append_upserts(spark.createDataFrame(
+                [("u1", "http://a/1", "replay-b", 30)], schema),
+                batch_id=4)):
+        write()
+        view = sink.current()
+        assert all(view is not v for v in views)
+        assert sink.current() is view
+        views.append(view)
+    # u4's purge tombstone (op_seq -1) loses to its op_seq 11 upsert
+    assert titles(views[-1]) == {"u1": "replay-b", "u3": "new-3",
+                                 "u4": "new-4"}
+
+
 def test_upsert_beats_earlier_tombstone(spark, tmp_path):
     """A UID deleted in the purge phase (op_seq -1) and re-crawled
     (op_seq >= 0) survives with the new version."""
