@@ -181,7 +181,9 @@ class IndexSink:
         _SUCCESS inode) of the base and of every committed delta dir.
         Any append, compaction or in-place rewrite of a generation
         (a crash replay overwrites its batch dir) writes a new
-        ``_SUCCESS`` and so changes the key. Pure metadata."""
+        ``_SUCCESS`` and so changes the key. The inode is there because
+        ``write_base_files`` copies with ``copytree``, which keeps the
+        source's mtime. Pure metadata."""
         key = []
         for p in [self.base_path] + [p for _, _, p in self._delta_dirs()]:
             try:
